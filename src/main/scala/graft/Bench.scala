@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
 object Bench {
@@ -22,7 +22,7 @@ object Bench {
   /** Execute a query to its FULL result set (noop sink — rows are
     * produced and discarded, never collected). Through r12 the harness
     * used `count()`, which lets Catalyst prune every expression the
-    * count does not need: a `PruneScan` audit found 133/191 queries
+    * count does not need: the `Audit prune` scan found 133/191 queries
     * lost work under count — for projection-final queries nearly ALL
     * of it (measured warm at sf0.1/32: `s1_wal2json_decode` 0.19 s
     * counted vs 2.03 s produced, `j_asof_pit` 0.39→3.85,
@@ -33,12 +33,105 @@ object Bench {
     * full-result semantics; cross-round comparisons against r12-and-
     * earlier artifacts must expect upward steps on the affected
     * queries (the COVERAGE round-12 section carries the A/B table). */
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  private def force(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
+  /** The timing core: seconds to build `df` and force it to its full
+    * result, then drop whatever the query cached (cleanup is charged to
+    * the query that cached, and caches never accumulate). */
+  def timeOnce(spark: SparkSession, df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try { force(df); (System.nanoTime() - t0) / 1e9 }
+    finally spark.catalog.clearCache()
+  }
+
+  final case class Summary(min: Double, median: Double, all: Seq[Double])
+
+  /** min and true median (the mean of the two middle readings when the
+    * count is even) over `xs`, kept in measurement order. */
+  def summarize(xs: Seq[Double]): Summary = {
+    val s = xs.sorted
+    val m = s.length / 2
+    Summary(s.head, if (s.length % 2 == 0) (s(m - 1) + s(m)) / 2 else s(m), xs)
+  }
+
+  /** Arm order of round `rep`: as given on even rounds, reversed on odd
+    * ones, so no arm always runs first (or right after another's
+    * cleanup). */
+  private def roundOrder[A](arms: Seq[A], rep: Int): Seq[A] =
+    if (rep % 2 == 0) arms else arms.reverse
+
+  /** Interleaved A/B in one JVM: each arm (a timing thunk) runs once
+    * untimed to warm codegen/JIT, then `reps` rounds in [[roundOrder]].
+    * Compare mins: separate invocations are not comparable below
+    * ~0.5 s effect size. */
+  def interleave(arms: Seq[(String, () => Double)], reps: Int): Seq[(String, Summary)] = {
+    arms.foreach(_._2())
+    val readings = (0 until reps).flatMap(rep =>
+      roundOrder(arms, rep).map { case (name, t) => name -> t() })
+    arms.map { case (name, _) =>
+      name -> summarize(readings.collect { case (`name`, x) => x }) }
+  }
+
+  /** The session every harness main uses: `cpus` local cores and as
+    * many shuffle partitions, UTC, no UI. */
+  def session(cpus: String, aqe: Boolean = true,
+      logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** Warm the JVM/codegen/parquet-footer paths so the first measured
+    * query isn't charged the session cold start (~5-8 s). */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    Seq("events", "documents", "embeddings", "lineitem")
+      .foreach(t => graft.cdc.ChangeFeed.table(spark, sfDir, t).count())
+  }
+
+  /** 3-decimal Locale.ROOT (r17 closing-line fix): raw Double.toString
+    * renders ~10-17 chars per reading and the closing line must stay as
+    * small as full fidelity allows — 1 ms resolution is already below
+    * the suite's noise band (±0.3 s). The default-locale f"" interpolator
+    * would render 1.5 as "1,5" on a comma-decimal JVM. */
+  private def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** `Bench` runs the suite; `Bench ab <reps> <query>...` interleaves
+    * the named registry queries (one arm each) and prints one
+    * `ABJSON {...}` line. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    args.toSeq match {
+      case Seq() => suite(sfDir, cpus)
+      case "ab" +: reps +: names if names.nonEmpty => ab(sfDir, cpus, reps.toInt, names)
+      case _ =>
+        System.err.println("usage: Bench | Bench ab <reps> <query>...")
+        sys.exit(2)
+    }
+  }
+
+  private def ab(sfDir: String, cpus: String, reps: Int, names: Seq[String]): Unit = {
+    val spark = session(cpus)
+    warmUp(spark, sfDir)
+    val arms = names.map(n => n -> (() => timeOnce(spark, SparkEntry.queries(n)(spark, sfDir))))
+    val body = interleave(arms, reps).map { case (n, s) =>
+      s""""$n":{"min":${f3(s.min)},"median":${f3(s.median)},""" +
+        s""""all":${s.all.map(f3).mkString("[", ",", "]")}}"""
+    }.mkString(",")
+    spark.stop()
+    println(s"""ABJSON {"reps":$reps,"cpus":"$cpus","sf":"$sfDir",$body}""")
+  }
+
+  private def suite(sfDir: String, cpus: String): Unit = {
     // the fresh-JVM knee runs FIRST, before anything else heats the
     // HOST: r11 measured that the degradation that under-reads the knee
     // outlives the JVM (a fork launched right after the ~25-minute batch
@@ -48,19 +141,8 @@ object Bench {
     // enough; fresh host-minutes are. At Bench start the host is the
     // quietest this process will ever see it.
     val kneeFresh = kneeFreshForked(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/codegen/parquet-footer paths so the first measured query
-    // isn't charged the session cold-start (~5-8 s).
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("events", "documents", "embeddings", "lineitem")
-      .foreach(t => graft.cdc.ChangeFeed.table(spark, sfDir, t).count())
+    val spark = session(cpus)
+    warmUp(spark, sfDir)
     // a crashed run is recorded as -1 (and the name lands in `failed`),
     // never as its elapsed-time-to-failure: a query that starts dying
     // quickly must not masquerade as a fast warm run in warm_min
@@ -79,13 +161,8 @@ object Bench {
       // a failed control reading records -1 and marks its segments
       // suspect (the session is in an unknown state, which is the thing
       // the sentinel exists to flag) — it must not crash the suite
-      try {
-        val t0 = System.nanoTime()
-        force(controlFn(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      } catch { case scala.util.control.NonFatal(e) =>
+      try timeOnce(spark, controlFn(spark, sfDir))
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] control query failed: $e"); -1.0 }
     }
     // the KneeFresh retry discipline (DriftStamp.adjudicate): an
@@ -103,21 +180,14 @@ object Bench {
         bestControl = recorded
       recorded
     }
-    def time(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { force(fn(spark, sfDir)); true }
+    def time(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      val dt =
+        try timeOnce(spark, fn(spark, sfDir))
         catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: $e"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop query-persisted intermediates so caches never accumulate
-      // across the suite (cleanup charged to the query that cached)
-      spark.catalog.clearCache()
+          System.err.println(s"[bench] $name failed: $e"); failed += name; -1.0 }
       nTimed += 1
       if (nTimed % ControlEvery == 0) controlTicks += ((nTimed, controlTick()))
-      if (ok) dt else { failed += name; -1.0 }
+      dt
     }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     // control baseline: two draws before anything else, keep the min
@@ -156,40 +226,30 @@ object Bench {
       val runs = warm1Map(name) +: warm2Map.get(name).toSeq
       name -> (if (failed(name)) -1.0 else runs.min)
     }
-    // drift adjudication (DriftStamp, r15 verdict task 3): baseline =
-    // median tick; a run is suspect only when BOTH control boundaries of
-    // its segment drifted past DriftSuspect AFTER the per-tick retry —
+    // drift adjudication (DriftStamp): baseline = median tick; a run is
+    // suspect when BOTH control boundaries of its segment drifted past
+    // DriftSuspect, or when one boundary is a spike its retry confirmed —
     // the artifact self-adjudicates a text_rrf-style false regression
     // without letting one transient blip condemn 40 queries
     val ticks = controlTicks.toIndexedSeq
     val baseline = DriftStamp.baselineOf(ticks)
     val drift = DriftStamp.driftSeries(ticks)
     val suspect = DriftStamp.suspects(ticks, oneshot ++ warm1 ++ warm2,
-      DriftSuspect)
-    // 3-decimal Locale.ROOT values (r17 driver-contract fix): raw
-    // Double.toString renders ~10-17 chars per reading and the closing
-    // line must stay as small as full fidelity allows — 1 ms resolution
-    // is already below this host's noise band (±0.3 s).
-    def s3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+      DriftSuspect, retried = controlRetries.map(_._1).toSet)
     def jmap(xs: Seq[(String, Double)]): String =
-      xs.map { case (k, v) => s"\"" + k + "\":" + s3(v) }.mkString("{", ",", "}")
+      xs.map { case (k, v) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     val total = oneshot.map(_._3).filter(_ >= 0).sum
     // a failed reading's infinite drift must read DEGRADED downstream
     // (any > threshold check), never -1 — JSON has no Infinity, so a
-    // large finite sentinel carries the signal. Locale.ROOT formatting:
-    // the default-locale f"" interpolator renders 1.5 as "1,5" on a
-    // comma-decimal JVM and the whole bench JSON stops parsing.
-    def driftJson(d: Double): String =
-      if (d.isInfinity) "9999.999"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+    // large finite sentinel carries the signal.
+    def driftJson(d: Double): String = if (d.isInfinity) "9999.999" else f3(d)
     val controlJson =
-      s""""control":{"name":"$ControlQuery","baseline_sec":${s3(baseline)},""" +
-        s""""series":${ticks.map(t => s"[${t._1},${s3(t._2)}]").mkString("[", ",", "]")},""" +
+      s""""control":{"name":"$ControlQuery","baseline_sec":${f3(baseline)},""" +
+        s""""series":${ticks.map(t => s"[${t._1},${f3(t._2)}]").mkString("[", ",", "]")},""" +
         s""""drift":${drift.map(driftJson).mkString("[", ",", "]")},""" +
         s""""max_drift":${driftJson(drift.max)},""" +
         s""""retried":${controlRetries
-          .map(t => s"[${t._1},${s3(t._2)}]").mkString("[", ",", "]")}},""" +
+          .map(t => s"[${t._1},${f3(t._2)}]").mkString("[", ",", "]")}},""" +
         s""""prewarmed":["$ControlQuery"],""" +
         s""""suspect":${suspect.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     // streaming SLO: commit→broadcast latency at the reference's implied
@@ -222,7 +282,7 @@ object Bench {
       // sink (frames produced to a partitioned log instead of the bus,
       // latency clocked after the produce) — proves the durable hand-off
       // doesn't break the sustained-rate story at knee-order rates. The
-      // ViaLogProbe decomposition (r11): the seam sustains 320k only
+      // via-log decomposition (r11): the seam sustains 320k only
       // with partitions ≈ producer threads (8 partitions fail on the
       // per-partition produce lock, p99 1073; 32 partitions p99 640);
       // the per-record produce cost caps the seam between 320k and
@@ -278,13 +338,11 @@ object Bench {
         if (bandApplies)
           c.rowsPerSec.toDouble / KneeFresh.QuietBandRowsPerSec
         else -1.0
-      def h3(d: Double): String =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
       val hostJson =
         s""""host":{"raw_rows_per_sec":${ctlStart.rowsPerSec},""" +
           s""""raw_rows_per_sec_end":${ctlEnd.rowsPerSec},""" +
-          s""""health":${h3(health(ctlStart))},""" +
-          s""""health_end":${h3(health(ctlEnd))},""" +
+          s""""health":${f3(health(ctlStart))},""" +
+          s""""health_end":${f3(health(ctlEnd))},""" +
           s""""suspect":${KneeFresh.suspectVerdict(bandApplies,
             health(ctlStart), health(ctlEnd))}},"""
       // r17 driver-contract fix (r16 VERDICT item 1): the full sweep /
@@ -311,19 +369,21 @@ object Bench {
           s""""failure_mode":"${kn.failureMode}"}"""
       val sideFile = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT",
         "plans/bench_stream_latest.json")
-      try {
+      // a failed write is not pointed at: detail_file is null then
+      val detailFile = try {
         val p = java.nio.file.Paths.get(sideFile)
         if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p,
           streamFull.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        "\"" + sideFile + "\""
       } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] stream side-file write failed: $e") }
+        System.err.println(s"[bench] stream side-file write failed: $e"); "null" }
       s""","stream":{"p50_ms":${r.steady.p50},"p95_ms":${r.steady.p95},""" +
         s""""p99_ms":${r.steady.p99},"sustained":$baseOk,""" +
         s""""via_log_sustained":$vlOk,""" +
         s""""max_sustained_rate":$maxSustained,""" +
         s""""knee_in_suite":$kneeInSuite,""" +
-        s""""failure_mode":"${kn.failureMode}","detail_file":"$sideFile"}"""
+        s""""failure_mode":"${kn.failureMode}","detail_file":$detailFile}"""
     } catch {
       // NonFatal only: an OOM/linkage error must crash loudly, and a
       // failed measurement must not masquerade as "not requested"
@@ -338,7 +398,7 @@ object Bench {
     // suppressing sbt's trailing success banner) — the driver parses the
     // final line of the run's stdout as the bench artifact.
     spark.stop()
-    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","cpus":$cpus,"queries":${jmap(oneshot.map(r => r._1 -> r._3))},"warm_min":${jmap(warmMin)},"failed":$failedJson,$controlJson,"sf":"$sfDir"$stream}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":$cpus,"queries":${jmap(oneshot.map(r => r._1 -> r._3))},"warm_min":${jmap(warmMin)},"failed":$failedJson,$controlJson,"sf":"$sfDir"$stream}""")
   }
 
   /** Fork [[KneeFresh]] in a new JVM (same classpath and JVM flags as

@@ -17,12 +17,11 @@ package graft
   *     First readings stay on the artifact's `retried` list — the same
   *     first-sweep-kept-on-record contract as KneeFresh.
   *
-  *  2. Stamp only BETWEEN two confirmed-drifted boundaries
-  *     ([[suspects]]): a run is suspect only when BOTH control ticks
-  *     bracketing its segment drifted past the bound. A single
-  *     confirmed-drifted tick between two clean ones stamps nothing:
-  *     whatever bit the control did not outlive the segment, so the
-  *     queries around it measured on a healthy session.
+  *  2. Stamp BETWEEN two drifted boundaries ([[suspects]]): a run is
+  *     suspect when both control ticks bracketing its segment drifted
+  *     past the bound. A single drifted tick that was never retried
+  *     stamps nothing; one whose retry confirmed the spike stamps both
+  *     segments next to it.
   */
 object DriftStamp {
 
@@ -65,22 +64,30 @@ object DriftStamp {
   }
 
   /** Names of runs whose bracketing control ticks BOTH drifted past
-    * `threshold`. `runs` are (name, nth-measured-run-when-started,
-    * seconds); failed runs (sec < 0) are never stamped (they are
-    * already in `failed`). A run starting AT a tick boundary belongs
-    * to the segment that follows it. */
+    * `threshold`, or one of whose ticks is a CONFIRMED spike: a tick at
+    * a `retried` position (nth run) still past `threshold` after its
+    * re-measure stamps both adjacent segments (BENCH_r17 recorded a
+    * 6.42 s control, retried at 6.77 s, with `suspect: []`). `runs` are
+    * (name, nth-measured-run-when-started, seconds); failed runs
+    * (sec < 0) are never stamped (they are already in `failed`). A run
+    * starting AT a tick boundary belongs to the segment that follows
+    * it. */
   def suspects(ticks: IndexedSeq[(Int, Double)],
-      runs: Seq[(String, Int, Double)], threshold: Double): Seq[String] = {
+      runs: Seq[(String, Int, Double)], threshold: Double,
+      retried: Set[Int] = Set.empty): Seq[String] = {
     val drift = driftSeries(ticks)
-    def segDrift(atRun: Int): Double = {
+    def confirmed(i: Int): Boolean =
+      retried(ticks(i)._1) && drift(i) > threshold
+    def suspectSegment(atRun: Int): Boolean = {
       val after = ticks.indexWhere(_._1 > atRun)
       val hi = if (after < 0) ticks.length - 1 else after
       val lo = math.max(0, hi - 1)
-      // BOTH boundaries must have drifted — min, not max (r15: max
-      // semantics let one blip condemn its two neighboring segments)
-      math.min(drift(lo), drift(hi))
+      // unretried ticks: BOTH boundaries must have drifted — min, not
+      // max (r15: max semantics let one blip condemn its two
+      // neighboring segments; the retry now screens blips out)
+      math.min(drift(lo), drift(hi)) > threshold || confirmed(lo) || confirmed(hi)
     }
-    runs.filter { case (_, atRun, sec) => sec >= 0 && segDrift(atRun) > threshold }
+    runs.filter { case (_, atRun, sec) => sec >= 0 && suspectSegment(atRun) }
       .map(_._1).distinct.sorted
   }
 }

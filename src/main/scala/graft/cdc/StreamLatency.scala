@@ -36,7 +36,7 @@ object StreamLatency {
 
   /** (commitMs, latencyMs) samples for one run — recorded through
     * per-thread striped buffers, NOT a shared concurrent queue. The
-    * KneeProfile decomposition (round 11) measured the old
+    * round-11 knee decomposition measured the old
     * ConcurrentLinkedQueue recorder as the knee's binding resource: a
     * boxed tuple allocation plus a CAS on one shared tail per frame
     * across 32 producer threads cost ~0.5 µs/frame, capping the measured
@@ -93,8 +93,8 @@ object StreamLatency {
   }
 
   /** Drop `runId`'s stripes without reading them and tombstone the id —
-    * for callers (KneeProfile's prof-* sinks, failed runs) that time
-    * through a [[TimingSink]] but never consume the samples. */
+    * for runs (a failed one, or one already drained) whose samples are
+    * never consumed. */
   private[graft] def discard(runId: String): Unit = {
     closed.add(runId)
     registry.remove(runId)
@@ -139,24 +139,6 @@ object StreamLatency {
     }
   }
 
-  /** Timing sink wrapping an arbitrary transport sink: clocks each frame
-    * after the inner `offer` returns (produce-call-returned — the Kafka
-    * client-queued analog; batch-level durability happens at the inner
-    * sink's partition `flush`, which precedes the engine's batch
-    * completion) and delegates `flush`. Used to time the FILE-backed
-    * durable produce path ([[graft.FileSeamProbe]]). */
-  final class WrapTimingSink(runId: String,
-      inner: CdcStream.DeliverySink) extends CdcStream.DeliverySink {
-    def offer(d: CdcStream.Delivery): Unit = {
-      inner.offer(d)
-      val commit = parseCommitMs(d.frame)
-      if (commit > 0L)
-        StreamLatency.record(runId, commit,
-          System.currentTimeMillis() - commit)
-    }
-    override def flush(): Unit = inner.flush()
-  }
-
   /** Extract the epoch-millis commit stamp from the encoded frame without
     * a JSON parse (the hot path must not cost more than the pipeline). */
   private[cdc] def parseCommitMs(frame: String): Long = {
@@ -177,8 +159,8 @@ object StreamLatency {
     * pacing fix lands in ONE place: feeds `ratePerSec` Changes for
     * `seconds` in 50 ms steps pinned to the wall clock (the offered
     * rate stays `ratePerSec` even when addData itself stalls briefly).
-    * Each step splits into `feedChunks` addData blocks (0 = adaptive:
-    * ~4k-row blocks capped at 16; rates ≤ ~80k/s keep one block):
+    * Each step splits into ~4k-row addData blocks, capped at 16 (rates
+    * ≤ ~80k/s keep one block):
     * MemoryStream materializes ONE partition per addData block, so a
     * 1-block feeder gives every micro-batch ~2 partitions and the whole
     * pipeline runs on ~2 tasks regardless of cores — a HARNESS
@@ -186,13 +168,11 @@ object StreamLatency {
     * ReplayLog DSv2, a broker) spreads by construction. Chunked feeding
     * models that spread. Returns rows sent. */
   private[graft] def feedAdaptive(input: MemoryStream[Change],
-      ratePerSec: Int, seconds: Int, feedChunks: Int = 0): Long = {
+      ratePerSec: Int, seconds: Int): Long = {
     val stepMs = 50
     val perStep = ratePerSec * stepMs / 1000
     val steps = seconds * 1000 / stepMs
-    val chunks =
-      if (feedChunks > 0) feedChunks
-      else math.min(16, math.max(1, perStep / 4000))
+    val chunks = math.min(16, math.max(1, perStep / 4000))
     val chunk = math.max(1, perStep / chunks)
     val t0 = System.nanoTime()
     var step = 0
@@ -237,14 +217,9 @@ object StreamLatency {
     * `viaLog` routes deliveries through the outbound ReplayLog sink
     * (topic, partitions) and clocks AFTER the produce — the caller owns
     * the topic's cleanup. */
-  /** `feedChunks` 0 = adaptive (default): split each 50 ms feed step
-    * into ~4k-row blocks, capped at 16 — low rates keep one block per
-    * step (identical to the historical feeder), high rates spread. */
   def run(spark: SparkSession, ratePerSec: Int = 1000, seconds: Int = 8,
       triggerMs: Long = 100L, warmupSec: Int = 3,
-      viaLog: Option[(String, Int)] = None,
-      feedChunks: Int = 0,
-      viaSink: Option[CdcStream.DeliverySink] = None): Report = {
+      viaLog: Option[(String, Int)] = None): Report = {
     require(ratePerSec >= 20 && ratePerSec % 20 == 0,
       s"ratePerSec must be a positive multiple of 20 (50 ms feed steps), got $ratePerSec")
     require(seconds >= 1 && warmupSec < seconds)
@@ -263,12 +238,9 @@ object StreamLatency {
     val dataSchema = Seq.empty[Change].toDS().toDF()
       .drop("change_type", "commit_timestamp").schema
     val bus = CdcStream.MemoryBus()
-    val sink: CdcStream.DeliverySink = viaSink match {
-      case Some(s) => new WrapTimingSink(runId, s)
-      case None => viaLog match {
-        case Some((topic, parts)) => new LogTimingSink(runId, topic, parts)
-        case None => new TimingSink(runId)
-      }
+    val sink: CdcStream.DeliverySink = viaLog match {
+      case Some((topic, parts)) => new LogTimingSink(runId, topic, parts)
+      case None => new TimingSink(runId)
     }
     val q = CdcStream.start(input.toDF(), subs, dataSchema, "t",
       pk = Seq("id"), bus = bus, triggerMs = triggerMs,
@@ -277,7 +249,7 @@ object StreamLatency {
     val t0Ms = System.currentTimeMillis()
     try {
       try {
-      nSent = feedAdaptive(input, ratePerSec, seconds, feedChunks)
+      nSent = feedAdaptive(input, ratePerSec, seconds)
       q.processAllAvailable()
       } finally q.stop()
     val all = drain(runId)
@@ -295,18 +267,16 @@ object StreamLatency {
     * foreachBatch accumulator, `busyMs` = Σ engine batch durations, and
     * the busy throughput `rowsPerSec = rows / busy` — a host-speed
     * number independent of the offered rate's pacing sleeps. */
-  final case class RawFloor(rate: Int, seconds: Int, batches: Int,
-      rows: Long, busyMs: Long, p50Ms: Long, maxMs: Long,
-      feedWallMs: Long, drainTailMs: Long) {
+  final case class RawFloor(rows: Long, busyMs: Long) {
     def rowsPerSec: Long = if (busyMs == 0) -1L else rows * 1000L / busyMs
   }
 
   /** The engine-floor CONTROL: the knee harness's feeder into a bare
     * foreachBatch row count — NO match/shape/encode/fan-out — so the
     * measured throughput is the MemoryStream + micro-batch-engine floor
-    * that no pipeline optimization can pass. Two consumers: KneeProfile's
-    * decomposition (the raw leg) and [[graft.KneeFresh]]'s host-health
-    * stamp — the same binary run on a quiet host reads a committed band,
+    * that no pipeline optimization can pass. It is the host-health
+    * stamp of [[graft.KneeFresh]] and of Bench's stream block — the
+    * same binary run on a quiet host reads a committed band,
     * and a degraded reading marks the knee artifact suspect (the r11
     * adjudication gap: the driver's recorded knee was taken minutes after
     * its own correctness marathon and under-read the quiet-host truth
@@ -327,21 +297,15 @@ object StreamLatency {
         }
         ()
       }.start()
-    val t0 = System.nanoTime()
     try {
       feedAdaptive(input, ratePerSec, seconds)
-      val feedWallMs = (System.nanoTime() - t0) / 1000000L
       q.processAllAvailable()
-      val drainWallMs = (System.nanoTime() - t0) / 1000000L
       Thread.sleep(500L) // let the async listener bus drain
       val snap = graft.cdc.Telemetry.snapshot(spark, registry)
       val durs = snap.where(org.apache.spark.sql.functions.col("metric") ===
           "batch_duration_ms")
-        .select("value").collect().map(_.getDouble(0).toLong).sorted
-      RawFloor(ratePerSec, seconds, durs.length, acc.value, durs.sum,
-        p50Ms = if (durs.isEmpty) -1L else durs(durs.length / 2),
-        maxMs = durs.lastOption.getOrElse(-1L),
-        feedWallMs = feedWallMs, drainTailMs = drainWallMs - feedWallMs)
+        .select("value").collect().map(_.getDouble(0).toLong)
+      RawFloor(acc.value, durs.sum)
     } finally {
       q.stop()
       spark.streams.removeListener(l)

@@ -623,12 +623,6 @@ object Dedup {
     * round N's plan doesn't embed rounds 1..N-1 (the classic
     * iterative-Spark OOM). Nothing vertex- or edge-sized ever reaches
     * the driver. */
-  /** Rounds the most recent [[connectedComponents]] ITERATIVE run took
-    * to converge (−1 before any; untouched by the small-graph fast
-    * path). Probe telemetry for the O(log² n) round-bound claim — the
-    * convergence check itself stays inside the call. */
-  @volatile var lastIterRounds: Int = -1
-
   def connectedComponents(
       vertices: DataFrame, idCol: String,
       edges: DataFrame, aCol: String, bCol: String,
@@ -753,7 +747,6 @@ object Dedup {
       cur = next
       i += 1
     }
-    lastIterRounds = i
     if (changed > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connectedComponents did not converge in $maxIters rounds — " +

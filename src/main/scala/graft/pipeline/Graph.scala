@@ -23,7 +23,8 @@ object Graph {
     *              Σ_{u→v} floor₂(damp · r_t(u) / (10^6 · outdeg(u))),
     * where floor₂ is the overflow-safe two-term evaluation below.
     *
-    * Why per-node units (GraphProbe, r16): the earlier TOTAL-mass law
+    * Why per-node units (r16, PROBE_graph_10m.json): the earlier
+    * TOTAL-mass law
     * (`r_0 = 10^6 div N`, base `(10^6 − damp) div N`) floors the base
     * term to ZERO for N > 150 000 and the initial rank to zero for
     * N > 10^6 — at 10M edges every rank collapsed to 0 (the probe's
@@ -45,15 +46,11 @@ object Graph {
     * iteration ONE join of ranks to edges (both shuffled on the node
     * id; co-partitioned after the first exchange) and one partial-agg
     * groupBy on dst. Edges+outdeg are computed once and persisted;
-    * ranks stay distributed (nothing driver-sized). The plan chain is
-    * linear in `iters` — for iteration counts beyond ~20, checkpoint
-    * every few rounds to cut lineage. */
+    * ranks stay distributed (nothing is collected); every iteration but
+    * the last is checkpointed to cut lineage. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampMicros: Long = 850000L,
-      prePartition: Boolean = true,
-      checkpointEvery: Int = 1,
       smallGraphEdgeCap: Long = 2000000L): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     require(iters >= 1 && dampMicros >= 0L && dampMicros <= 1000000L)
     val spark = edges.sparkSession
     // persist the PROJECTED edge list up front (r17): `edges` is
@@ -137,21 +134,20 @@ object Graph {
     val base = 1000000L - dampMicros
     val deg = ep.groupBy(col("_src").as("_s"))
       .agg(count(lit(1)).as("outdeg"))
-    // prePartition: cache the edge table HASH-PARTITIONED on _src so
-    // every iteration's rank join satisfies its distribution from the
-    // cache and only the (smaller) rank side shuffles. When the
-    // deg join runs as SMJ the output is already _src-partitioned and
-    // the explicit exchange is redundant — but when deg BROADCASTS
-    // (small graphs, or a cluster raising the broadcast threshold) the
-    // cached table inherits the scan's partitioning and every
-    // iteration re-shuffles ALL EDGES; one build-time exchange pins
-    // the invariant either way. Default ON — GraphProbe A/B: 12.5 →
-    // 8.2 s at 1M edges ×10 iters, 18.6 → 15.4 s at 10M (the delta is
-    // the per-iteration edge shuffle the cache partitioning elides).
-    val e0 = ep
+    // cache the edge table HASH-PARTITIONED on _src so every
+    // iteration's rank join satisfies its distribution from the cache
+    // and only the (smaller) rank side shuffles. When the deg join runs
+    // as SMJ the output is already _src-partitioned and the exchange is
+    // redundant — but when deg BROADCASTS (small graphs, or a cluster
+    // raising the broadcast threshold) the cached table inherits the
+    // scan's partitioning and every iteration re-shuffles ALL EDGES; one
+    // build-time exchange pins the invariant either way. A/B in
+    // PROBE_graph_10m.json: 12.5 → 8.2 s at 1M edges ×10 iters,
+    // 18.6 → 15.4 s at 10M.
+    val e = ep
       .join(deg, col("_src") === col("_s"))
       .select(col("_src"), col("_dst"), col("outdeg"))
-    val e = (if (prePartition) e0.repartition(col("_src")) else e0)
+      .repartition(col("_src"))
       .persist()
     var r = nodes.select(col("id"), lit(1000000L).as("rank_micros"))
     for (i <- 1 to iters) {
@@ -165,21 +161,17 @@ object Graph {
       r = nodes.join(contrib, col("id") === col("_dst"), "left")
         .select(col("id"),
           (lit(base) + coalesce(col("_sum"), lit(0L))).as("rank_micros"))
-      // truncate the lineage every `checkpointEvery` iterations
-      // (round-13 introduced the per-iteration reset): without any reset
-      // the final plan nests `iters` join rounds — Catalyst re-plans a
-      // doubling tree and the one mega-stage re-derives every earlier
-      // iteration's shuffles (text_textrank spent ~3 s of its 4.6 s
-      // warm here). r16 measured stride 1 vs 2 interleaved at sf0.1/32
-      // (4 reps each): 2.35 vs 2.38 s min — indistinguishable, so the
-      // default stays 1 (the r13 shape) and the stride is a caller knob
-      // for iteration counts ≫ 5 where the materialization jobs
-      // dominate. localCheckpoint keeps the rank table DISTRIBUTED (a
-      // driver collect would cap the node set at driver memory — wrong
-      // for a 100M-word vocabulary); the reset is skipped on the last
-      // pass so the returned frame still ends in the final join
-      // (composable lineage).
-      if (i < iters && i % checkpointEvery == 0) r = r.localCheckpoint()
+      // truncate the lineage every iteration (round 13): without a
+      // reset the final plan nests `iters` join rounds — Catalyst
+      // re-plans a doubling tree and the one mega-stage re-derives every
+      // earlier iteration's shuffles (text_textrank spent ~3 s of its
+      // 4.6 s warm here). r16 measured stride 1 vs 2 interleaved at
+      // sf0.1/32: 2.35 vs 2.38 s min, indistinguishable. localCheckpoint
+      // keeps the rank table DISTRIBUTED (a collect would cap the node
+      // set at one JVM's memory — wrong for a 100M-word vocabulary);
+      // the reset is skipped on the last pass so the returned frame
+      // still ends in the final join (composable lineage).
+      if (i < iters) r = r.localCheckpoint()
     }
     r
   }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Conditional pre-amplification spread (round-13, generalizing the
-  * `text_lm_score` finding — see [[graft.AmpScan]]): a Generate
+  * `text_lm_score` finding — see `graft.Audit amp`): a Generate
   * (explode) and everything above it up to the next exchange run at
   * the parallelism of whatever feeds the Generate. A small table is
   * ONE parquet split, so every explode-heavy pipeline over it

@@ -74,6 +74,19 @@ class DriftStampSpec extends AnyFunSuite {
     assert(DriftStamp.driftSeries(ticks)(0) == 1.0)
   }
 
+  test("a spike its retry confirmed stamps both adjacent segments") {
+    // BENCH_r17: control 6.42 s, retried at 6.77 s, yet `suspect: []`
+    val ticks = IndexedSeq((0, 0.8), (20, 0.8), (40, 0.8), (60, 6.77),
+      (80, 0.8), (100, 0.8))
+    val runs = runsAt(45, 65, 85)
+    assert(DriftStamp.suspects(ticks, runs, Th, retried = Set(60)) ==
+      Seq("q45", "q65"))
+    // never retried: the both-boundaries rule still applies
+    assert(DriftStamp.suspects(ticks, runs, Th).isEmpty)
+    // a retried tick that recovered in band confirms nothing
+    assert(DriftStamp.suspects(ticks, runs, Th, retried = Set(40)).isEmpty)
+  }
+
   test("failed runs are never stamped (they are in `failed` already)") {
     val ticks = IndexedSeq((0, 0.8), (20, 0.8), (40, 2.0), (60, 2.0))
     assert(DriftStamp.suspects(ticks, Seq(("qf", 45, -1.0)), Th).isEmpty)

@@ -53,4 +53,15 @@ class GraphSpec extends SparkSpec {
     assert(a.values.forall(_ > 0L),
       "per-node micro units must not underflow at any graph size")
   }
+
+  test("pageRank: the iterative path equals the small-graph kernel") {
+    val edges = (1L to 60L)
+      .map(i => (i % 12, (i * 7 + 3) % 12)).filter(e => e._1 != e._2)
+      .toDF("s", "t")
+    val kernel = Graph.pageRank(edges, "s", "t", iters = 4)
+      .as[(Long, Long)].collect().toMap
+    val iterative = Graph.pageRank(edges, "s", "t", iters = 4,
+      smallGraphEdgeCap = 0L).as[(Long, Long)].collect().toMap
+    assert(iterative == kernel)
+  }
 }
