@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.model.Subscription
 import graft.walrus.{Payload, Walrus}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -23,16 +23,22 @@ import scala.jdk.CollectionConverters._
   *    whose batch row count exceeds their events/batch cap have exactly
   *    their rows dropped and counted — the reference sheds per tenant
   *    keyed by the tenant's RateCounter (O10,
-  *    replication_poller.ex:404-415), never one tenant shedding everyone;
-  *  - encode-once (O6): the payload JSON is serialized once per (change ×
-  *    payload group) BEFORE the per-subscriber explode;
+  *    replication_poller.ex:404-415), never one tenant shedding everyone.
+  *    The counts are a narrow per-partition tally merged on the driver —
+  *    no shuffle;
+  *  - routing ([[processBatch]]): match → shape → frame is bound ONCE per
+  *    registry ([[Router]]) and each micro-batch is one pass over its rows
+  *    — no per-batch analysis, optimization or code generation;
+  *  - encode-once (O6): the payload JSON and the frame are built and
+  *    decoded once per (change × payload group), then offered to each of
+  *    the group's subscribers;
   *  - ordering: per-topic order preserved by partitioning on the table —
   *    at scale, repartition the stream by (schema, table) so each topic
   *    drains in commit order within its partition;
   *  - delivery: **executor-side** — frames leave from the partition that
-  *    produced them (`foreachPartition` → sink), never through the driver;
-  *    the delivery count rides back on a LongAccumulator from the same
-  *    pass. At 1000 executors the driver handles only telemetry.
+  *    produced them (task → sink), never through the driver; each task
+  *    returns only its row and delivery counts. At 1000 executors the
+  *    driver handles only telemetry.
   *    At-most-once like the reference (no sink-side ack); with a
   *    checkpointLocation Spark upgrades this to at-least-once — dedup on
   *    (change pk, subscription_id) makes it effectively-once.
@@ -93,8 +99,15 @@ object CdcStream {
   }
 
   /** Run one micro-batch of the CDC pipeline (also usable in plain batch
-    * mode): per-tenant gate → match → shape → encode-once → explode →
-    * executor-side delivery.
+    * mode): per-tenant gate → match → shape → encode-once → executor-side
+    * delivery. Ungated, the batch is ONE job: the delivery pass routes
+    * every row and counts them. Gated, it is two: the tenant tally, then
+    * the delivery pass over the kept rows (none when every tenant is
+    * shed). Both read `batch` through its `queryExecution.toRdd` — the
+    * batch is not persisted, so the gated path reads its source twice (a
+    * micro-batch's offset range re-reads the same rows) and a cache the
+    * caller holds on `batch` is used, never dropped. The routing is the
+    * registry's bound [[Router.Kernel]].
     *
     * @param tenantCol      column identifying the tenant; None = the whole
     *                       batch is one tenant gated by `defaultTenantLimit`.
@@ -117,111 +130,59 @@ object CdcStream {
       rates: Option[graft.rates.TenantRateCounters] = None,
       nowMs: Long = -1L,
       deliverTo: Option[DeliverySink] = None): BatchStats = {
-    val spark = batch.sparkSession
     val now = if (nowMs >= 0) nowMs else System.currentTimeMillis()
     val tBatch0 = System.nanoTime()
-    // ungated fast path: with no tenant gate, per-batch cap, or rate
-    // window configured, the batch flows source→sink in ONE Spark job —
-    // no persist, no standalone count() job (the change count rides an
-    // accumulator on a narrow counting pass instead). At the streaming
-    // knee the binding cost is per-batch job SCHEDULING, not compute:
-    // two jobs + persist per 100 ms trigger is twice the fixed overhead
-    // of one (measured: the 320 k/s p99 blowout halves, see Bench knee).
+    val kernel = Router.kernel(batch.sparkSession, batch.schema, subs, dataSchema,
+      table, pk, tenantCol)
+    val rows = batch.queryExecution.toRdd
+    val sink: DeliverySink = deliverTo.getOrElse(bus)
+    // ungated: with no tenant gate, per-batch cap or rate window, the batch
+    // is ONE job — the delivery pass counts the changes it routes
     val ungated = tenantCol.isEmpty && defaultTenantLimit == Long.MaxValue &&
       rates.isEmpty
-    val accChanges =
-      if (ungated) Some(spark.sparkContext.longAccumulator(s"graft.changes.$batchId"))
-      else None
-    val cached = accChanges match {
-      case Some(acc) =>
-        // counting identity pass; also an optimizer barrier, so the match
-        // filters below cannot push past it and under-count the batch
-        batch.mapPartitions { it => it.map { r => acc.add(1L); r } }(
-          org.apache.spark.sql.Encoders.row(batch.schema)).toDF()
-      case None => batch.persist()
-    }
-    try {
-      // per-tenant row counts: one small aggregate (map-side combined; the
-      // result is |tenants| rows — the tenant dimension, not the data)
-      val (kept, nChangesPre, shedTenants): (DataFrame, Long, Map[String, Long]) =
-        tenantCol match {
-          case Some(tc) =>
-            val counts = cached.groupBy(col(tc).cast("string").as("_tenant"))
-              .agg(count(lit(1)).as("_n"))
-              .collect()
-              .map(r => Option(r.getString(0)).getOrElse("null") -> r.getLong(1))
-            val total = counts.map(_._2).sum
+    val (nChanges, nDeliveries, shedTenants) =
+      if (ungated) {
+        val (n, d) = Router.deliver(rows, kernel, sink, Set.empty)
+        (n, d, Map.empty[String, Long])
+      } else {
+        // per-tenant row counts: a narrow per-partition tally merged here
+        // (|tenants| entries per task — the tenant dimension, not the data);
+        // without a tenant column the whole batch is tenant "*"
+        val counts = Router.tally(rows, kernel)
+        val total = counts.values.sum
+        val shed = tenantCol match {
+          case Some(_) =>
             // shed when over the per-batch cap OR when the cross-batch
             // windowed rate is already triggered (the reference checks the
             // RateCounter BEFORE processing the poll's rows,
             // replication_poller.ex:404-415)
-            val shed = counts.filter { case (t, n) =>
+            val over = counts.filter { case (t, n) =>
               n > tenantLimits.getOrElse(t, defaultTenantLimit) ||
                 rates.exists(_.triggered(t, now))
-            }.toMap
+            }
             // only processed (kept) rows feed the rate window — shed rows
             // are telemetry, so a throttled tenant recovers as its window
-            // drains
+            // drains; idle tenants' counters are dropped on this cadence
             rates.foreach { rc =>
-              counts.foreach { case (t, n) =>
-                if (!shed.contains(t)) rc.add(t, n, now)
-              }
+              counts.foreach { case (t, n) => if (!over.contains(t)) rc.add(t, n, now) }
+              rc.evictIdle(now)
             }
-            // kept-rows filter keys must live in the same space as the
-            // counts keys (NULL → "null"): a bare isin() over a NULL
-            // tenant evaluates to NULL and where() would silently drop
-            // non-shed NULL-tenant rows whenever any tenant is shed
-            val keptDf =
-              if (shed.isEmpty) cached
-              else cached.where(!coalesce(col(tc).cast("string"), lit("null"))
-                .isin(shed.keys.toSeq: _*))
-            (keptDf, total, shed)
-          case None if ungated =>
-            (cached, -1L, Map.empty[String, Long]) // count lands post-action
+            over
           case None =>
-            val n = cached.count()
-            if (n > defaultTenantLimit) (cached.limit(0), n, Map("*" -> n))
-            else (cached, n, Map.empty[String, Long])
+            if (total > defaultTenantLimit) Map("*" -> total) else Map.empty[String, Long]
         }
-      val matched = Walrus.matchedOnly(kept, subs, dataSchema, table)
-      // shape is a SINGLE projection pass (no per-group re-scan), so no
-      // mid-pipeline persist is needed: gate → match → shape → explode →
-      // sink is one narrow plan
-      val shaped = Payload.shape(matched, subs,
-        dataCols = dataSchema.fieldNames.toSeq, pk = pk)
-      // encode once per (change × payload group), then explode subscribers;
-      // record/old_record are already-encoded JSON and are spliced in raw
-      // (nesting them in to_json would double-escape them)
-      val deliveries = shaped
-        .withColumn("frame", concat(
-          lit("{\"type\":\""), col(Walrus.TypeCol),
-          lit("\",\"commit_timestamp\":\""), col("commit_timestamp"),
-          lit("\",\"record\":"), coalesce(col("record"), lit("null")),
-          lit(",\"old_record\":"), coalesce(col("old_record"), lit("null")),
-          lit(",\"errors\":"),
-          coalesce(to_json(col("errors")), lit("null")),
-          lit("}")))
-        .select(explode(col("subscription_ids")).as("subscription_id"),
-          col("frame"))
-      // executor-side fan-out: the driver never sees a frame; the delivery
-      // count rides back on an accumulator from the same pass
-      val acc = spark.sparkContext.longAccumulator(s"graft.deliveries.$batchId")
-      val sink: DeliverySink = deliverTo.getOrElse(bus)
-      deliveries.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        var n = 0L
-        it.foreach { r => sink.offer(Delivery(r.getString(0), r.getString(1))); n += 1 }
-        sink.flush()
-        acc.add(n)
+        // shed keys live in the tally's key space (NULL → "null"), so a
+        // NULL-tenant row is kept unless "null" itself is shed
+        val d =
+          if (counts.keySet.forall(shed.contains)) 0L
+          else Router.deliver(rows, kernel, sink, shed.keySet)._2
+        (total, d, shed)
       }
-      // the counting accumulator is final once the delivery action above
-      // has run — the one job of the ungated path
-      val nChanges = accChanges.map(_.value.toLong).getOrElse(nChangesPre)
-      val stats = BatchStats(batchId, nChanges, acc.value,
-        shed = shedTenants.nonEmpty, shedTenants = shedTenants,
-        durationMs = (System.nanoTime() - tBatch0) / 1000000L)
-      bus.record(stats)
-      stats
-    } finally if (accChanges.isEmpty) cached.unpersist()
+    val stats = BatchStats(batchId, nChanges, nDeliveries,
+      shed = shedTenants.nonEmpty, shedTenants = shedTenants,
+      durationMs = (System.nanoTime() - tBatch0) / 1000000L)
+    bus.record(stats)
+    stats
   }
 
   /** One micro-batch of the RAW-WAL pipeline: harvest Relation messages

@@ -69,10 +69,66 @@ object Payload {
       pk: Seq[String],
       maxBytes: Int = 1 << 20,
       unauthorizedRoles: Set[String] = Set.empty,
-      rlsEnabled: Boolean = false): DataFrame = {
+      rlsEnabled: Boolean = false): DataFrame =
+    groups(matched.schema, subs, dataCols, pk, maxBytes, unauthorizedRoles,
+        rlsEnabled) match {
+      case None =>
+        // no subscribers (e.g. every socket disconnected mid-stream): an
+        // empty result with the output schema, not a reduce-on-empty crash
+        val schema = StructType(
+          pk.map(c => StructField(c, matched.schema(c).dataType)) ++ Seq(
+            StructField(Walrus.TypeCol, StringType),
+            StructField("commit_timestamp", StringType),
+            StructField("claims_role", StringType),
+            StructField("selected_columns", StringType),
+            StructField("record", StringType),
+            StructField("old_record", StringType),
+            StructField("errors", ArrayType(StringType)),
+            StructField("subscription_ids", ArrayType(StringType))))
+        matched.sparkSession.createDataFrame(
+          matched.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case Some(arms) =>
+        // single pass: arm per group, drop unmatched arms, inline the rest.
+        // (see shapeGeneric for the map-shaped WAL variant)
+        // inline_outer + null post-filter (not plain inline): the plain
+        // generator makes InferFiltersFromGenerate add a pre-Generate
+        // size(..)>0 filter that re-evaluates every arm twice — same pitfall
+        // as the match battery (commit 4f05edc)
+        matched
+          .select(
+            (pk.map(col) :+
+              col(Walrus.TypeCol) :+
+              col("commit_timestamp") :+
+              arms.as("_groups")): _*)
+          .select(
+            (pk.map(col) :+
+              col(Walrus.TypeCol) :+
+              col("commit_timestamp") :+
+              inline_outer(col("_groups"))): _*)
+          .where(col("claims_role").isNotNull)
+    }
+
+  /** The per-change payload-group column of [[shape]] over rows of
+    * `schema` (which carries `subscription_ids`): an array of
+    * `struct(claims_role, selected_columns, record, old_record, errors,
+    * subscription_ids)`, one per payload group with a matching
+    * subscriber. A group whose `claims_role` is null is not delivered.
+    * None when `subs` is empty. The one definition of the payload
+    * semantics, also bound once per registry by the CDC router
+    * ([[graft.cdc.Router]]). */
+  def groups(
+      schema: StructType,
+      subs: Seq[Subscription],
+      dataCols: Seq[String],
+      pk: Seq[String],
+      maxBytes: Int = 1 << 20,
+      unauthorizedRoles: Set[String] = Set.empty,
+      rlsEnabled: Boolean = false): Option[Column] = {
+    // Option(role): a null role sorts first instead of throwing; its
+    // group is built and then dropped (no role, no delivery)
     val groups = subs.groupBy(s => (s.claimsRole, s.selectedColumns.sorted)).toSeq
-      .sortBy { case ((role, sel), _) => (role, sel.mkString(",")) }
-    val hasOld = matched.columns.exists(_.startsWith("old_"))
+      .sortBy { case ((role, sel), _) => (Option(role), sel.mkString(",")) }
+    val hasOld = schema.fieldNames.exists(_.startsWith("old_"))
     val noPk = pk.isEmpty
     val isIns = col(Walrus.TypeCol) === "INSERT"
     val isUpd = col(Walrus.TypeCol) === "UPDATE"
@@ -82,7 +138,7 @@ object Payload {
     val branches: Seq[Column] = groups.map { case ((role, selected), ss) =>
       val keep = Walrus.projectRecord(dataCols, selected, pk)
       val groupIds = array(ss.map(_.subscriptionId).sorted.map(lit): _*)
-      def dt(c: String) = matched.schema(c).dataType
+      def dt(c: String) = schema(c).dataType
       val recordFull = jsonObj(keep.map(c => (c, col(c), dt(c))))
       val recordTrunc = jsonObj(keep.map(c =>
         (c, when(octet_length(col(c).cast(StringType)) > 64, lit(null))
@@ -90,7 +146,7 @@ object Payload {
       val tooLarge = octet_length(recordFull) > maxBytes
       val oldJson =
         if (hasOld) {
-          val oldKeep = keep.filter(c => matched.columns.contains(s"old_$c"))
+          val oldKeep = keep.filter(c => schema.fieldNames.contains(s"old_$c"))
           val delKeep = if (rlsEnabled) oldKeep.filter(pk.contains) else oldKeep
           def enc(cols: Seq[String]): Column = when(tooLarge,
               jsonObj(cols.map(c =>
@@ -124,42 +180,8 @@ object Payload {
         errs.as("errors"),
         sort_array(ids).as("subscription_ids")))
     }
-    if (branches.isEmpty) {
-      // no subscribers (e.g. every socket disconnected mid-stream): an
-      // empty result with the output schema, not a reduce-on-empty crash
-      val schema = StructType(
-        pk.map(c => StructField(c, matched.schema(c).dataType)) ++ Seq(
-          StructField(Walrus.TypeCol, StringType),
-          StructField("commit_timestamp", StringType),
-          StructField("claims_role", StringType),
-          StructField("selected_columns", StringType),
-          StructField("record", StringType),
-          StructField("old_record", StringType),
-          StructField("errors", ArrayType(StringType)),
-          StructField("subscription_ids", ArrayType(StringType))))
-      matched.sparkSession.createDataFrame(
-        matched.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      // single pass: arm per group, drop unmatched arms, inline the rest.
-      // (see shapeGeneric for the map-shaped WAL variant)
-      // inline_outer + null post-filter (not plain inline): the plain
-      // generator makes InferFiltersFromGenerate add a pre-Generate
-      // size(..)>0 filter that re-evaluates every arm twice — same pitfall
-      // as the match battery (commit 4f05edc)
-      val arms = filter(array(branches: _*), b => b.isNotNull)
-      matched
-        .select(
-          (pk.map(col) :+
-            col(Walrus.TypeCol) :+
-            col("commit_timestamp") :+
-            arms.as("_groups")): _*)
-        .select(
-          (pk.map(col) :+
-            col(Walrus.TypeCol) :+
-            col("commit_timestamp") :+
-            inline_outer(col("_groups"))): _*)
-        .where(col("claims_role").isNotNull)
-    }
+    if (branches.isEmpty) None
+    else Some(filter(array(branches: _*), b => b.isNotNull))
   }
 
   /** [[shape]] for the generic decoded-WAL stream (record/old_record as

@@ -52,7 +52,21 @@ object Walrus {
       schema: StructType,
       table: String = "",
       schemaName: String = "public",
-      useCodegen: Boolean = true): DataFrame = {
+      useCodegen: Boolean = true): DataFrame =
+    changes.withColumn("subscription_ids", subscriptionIds(subs, schema, table,
+      schemaName, hasType = changes.columns.contains(TypeCol), useCodegen))
+
+  /** The `subscription_ids` column of [[matchSubscriptions]] — the one
+    * definition of the match semantics, also bound once per registry by
+    * the CDC router ([[graft.cdc.Router]]). `hasType`: the change rows
+    * carry [[TypeCol]] (action tags and the TRUNCATE arm need it). */
+  def subscriptionIds(
+      subs: Seq[Subscription],
+      schema: StructType,
+      table: String = "",
+      schemaName: String = "public",
+      hasType: Boolean = true,
+      useCodegen: Boolean = true): Column = {
     val relevant = subs.filter(s =>
       (s.table == "*" || s.table == table || table.isEmpty) &&
       (s.schema == "*" || s.schema == schemaName))
@@ -61,7 +75,6 @@ object Walrus {
       .groupBy(s => (s.actionFilter, s.filters))
       .toSeq
       .sortBy(_._1.toString)
-    val hasType = changes.columns.contains(TypeCol)
     // action as a TAG, not a conjunct: the battery groups tagged arms
     // under one change-type comparison per distinct action (jump table),
     // so a row evaluates only its own action's arms plus the '*' arms
@@ -81,10 +94,6 @@ object Walrus {
       .flatten.map(_.subscriptionId).sorted
     val bat = battery(armed,
       typeCol = if (hasType) Some(col(TypeCol)) else None, useCodegen)
-    val idsCol =
-      if (!hasType || armed.isEmpty) bat
-      else when(col(TypeCol) === lit(graft.model.ChangeType.Truncate),
-        array(starIds.map(lit): _*).cast(ArrayType(StringType))).otherwise(bat)
     // NOT EvalOnce-fenced — attempted r12, reverted on a CodegenAudit
     // catch: the battery's doGenCode splits its arm blocks into methods
     // whose parameter lists assume the default projection codegen; under
@@ -95,10 +104,12 @@ object Walrus {
     // interpreted). Cost of living without it: consumer filters on
     // `subscription_ids` inline a second battery evaluation in three
     // sub-second batch compositions (DupExprScan cross-node rows,
-    // assessed there); the knee-path micro-batch plan keeps the battery
-    // single-copy regardless (its filter does not push past the
-    // counting barrier).
-    changes.withColumn("subscription_ids", idsCol)
+    // assessed there). The CDC micro-batch does not pay it: its router
+    // evaluates the bound battery once per row and skips empty matches
+    // itself, with no Filter over the column.
+    if (!hasType || armed.isEmpty) bat
+    else when(col(TypeCol) === lit(graft.model.ChangeType.Truncate),
+      array(starIds.map(lit): _*).cast(ArrayType(StringType))).otherwise(bat)
   }
 
   /** Battery column over (predicate, sorted ids, action tag) arms —

@@ -285,22 +285,53 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("delivery happens on executor task threads, not the driver") {
-    CdcStreamSpec.offerThreads.clear()
     // a sink that records the thread each offer ran on, via the same
     // static-registry pattern MemoryBus uses (a closure-captured queue
     // would be serialized into the task and its COPY mutated instead)
     val sink: CdcStream.DeliverySink = new CdcStreamSpec.ThreadRecordingSink
-    // drive the same executor-side path processBatch uses
-    val deliveries = (1 to 8).map(i => (s"s$i", s"frame$i")).toDF(
-      "subscription_id", "frame")
-    deliveries.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      it.foreach(r => sink.offer(CdcStream.Delivery(r.getString(0), r.getString(1))))
+    val changes = (1 to 8).map(i => Change(i, "INSERT", 60.0,
+      s"2024-01-01T00:00:0$i.000Z")).toDF().repartition(4)
+    for (gated <- Seq(false, true)) {
+      CdcStreamSpec.offerThreads.clear()
+      val st = CdcStream.processBatch(changes, subs, dataSchema, "t", Seq("id"),
+        CdcStream.MemoryBus(), defaultTenantLimit = if (gated) 100L else Long.MaxValue,
+        deliverTo = Some(sink))
+      val names = CdcStreamSpec.offerThreads.asScala.toSeq
+      // sA and sB both match every change
+      assert(st.nDeliveries == 16 && names.size == 16, s"gated=$gated")
+      // local[n] runs tasks on "Executor task launch worker-*" threads; the
+      // driver's main/test thread never touches a frame
+      assert(names.forall(_.contains("Executor task launch worker")), s"gated=$gated")
     }
-    val names = CdcStreamSpec.offerThreads.asScala.toSeq
-    assert(names.size == 8)
-    // local[n] runs tasks on "Executor task launch worker-*" threads; the
-    // driver's main/test thread never touches a frame
-    assert(names.forall(_.contains("Executor task launch worker")))
+  }
+
+  test("gated batches evict idle tenants' rate counters; a returning tenant starts empty") {
+    val tSchema = Seq.empty[TChange].toDS().toDF()
+      .drop("change_type", "commit_timestamp").schema
+    val tSubs = Seq(Subscription("sAll", "public", "t", Nil))
+    // a window longer than the idle limit (600 s, cap 0.05 events/s), so
+    // only eviction can empty it before the tenant returns
+    val rc = new graft.rates.TenantRateCounters(600, defaultLimitPerSec = 0.05)
+    def process(tenant: String, n: Int, atSec: Long) = CdcStream.processBatch(
+      (1 to n).map(i => TChange(i, tenant, "INSERT", 60.0,
+        "2024-01-01T00:00:00.000Z")).toDF(), tSubs, tSchema, "t", Seq("id"),
+      CdcStream.MemoryBus(), tenantCol = Some("tenant"), rates = Some(rc),
+      nowMs = atSec * 1000)
+    // t=0: both tenants counted; tA's 50 rows (50/600 s) trigger its cap
+    process("tA", 50, 0L)
+    process("tB", 1, 0L)
+    assert(rc.nTracked == 2 && rc.triggered("tA", 1000L))
+    // t=299: tA idle 299 s — kept
+    process("tB", 1, 299L)
+    assert(rc.nTracked == 2)
+    // t=300: tA idle 300 s — dropped on this batch's cadence
+    process("tB", 1, 300L)
+    assert(rc.nTracked == 1)
+    // tA returns: its window restarted empty (kept, its t=0 rows would
+    // still trigger the cap), so the batch is delivered, not shed
+    val back = process("tA", 5, 301L)
+    assert(!back.shed && back.nDeliveries == 5 && rc.nTracked == 2)
+    assert(rc.avg("tA", 301000L) == 5.0 / 600)
   }
 }
 
