@@ -32,6 +32,11 @@ import scala.jdk.CollectionConverters._
   *  - encode-once (O6): the payload JSON and the frame are built and
   *    decoded once per (change × payload group), then offered to each of
   *    the group's subscribers;
+  *  - WAL sources ([[processWalBatch]], [[startWal]],
+  *    [[startAdaptivePollWal]]): binary pgoutput, wal2json v2 and Debezium
+  *    envelopes differ only in their decode step, a [[WalFormat]]; the
+  *    match → shape → frame → deliver tail, the stream attach and the
+  *    poll loop exist once for all three;
   *  - ordering: per-topic order preserved by partitioning on the table —
   *    at scale, repartition the stream by (schema, table) so each topic
   *    drains in commit order within its partition;
@@ -110,7 +115,8 @@ object CdcStream {
     * registry's bound [[Router.Kernel]].
     *
     * @param tenantCol      column identifying the tenant; None = the whole
-    *                       batch is one tenant gated by `defaultTenantLimit`.
+    *                       batch is the one tenant "*", gated like any other
+    *                       (cap, `tenantLimits("*")`, `rates`).
     * @param tenantLimits   per-tenant events/batch overrides.
     * @param defaultTenantLimit cap for tenants not in `tenantLimits`.
     * @param deliverTo      override delivery sink (latency probes, external
@@ -150,26 +156,20 @@ object CdcStream {
         // without a tenant column the whole batch is tenant "*"
         val counts = Router.tally(rows, kernel)
         val total = counts.values.sum
-        val shed = tenantCol match {
-          case Some(_) =>
-            // shed when over the per-batch cap OR when the cross-batch
-            // windowed rate is already triggered (the reference checks the
-            // RateCounter BEFORE processing the poll's rows,
-            // replication_poller.ex:404-415)
-            val over = counts.filter { case (t, n) =>
-              n > tenantLimits.getOrElse(t, defaultTenantLimit) ||
-                rates.exists(_.triggered(t, now))
-            }
-            // only processed (kept) rows feed the rate window — shed rows
-            // are telemetry, so a throttled tenant recovers as its window
-            // drains; idle tenants' counters are dropped on this cadence
-            rates.foreach { rc =>
-              counts.foreach { case (t, n) => if (!over.contains(t)) rc.add(t, n, now) }
-              rc.evictIdle(now)
-            }
-            over
-          case None =>
-            if (total > defaultTenantLimit) Map("*" -> total) else Map.empty[String, Long]
+        // shed when over the per-batch cap OR when the cross-batch
+        // windowed rate is already triggered (the reference checks the
+        // RateCounter BEFORE processing the poll's rows,
+        // replication_poller.ex:404-415)
+        val shed = counts.filter { case (t, n) =>
+          n > tenantLimits.getOrElse(t, defaultTenantLimit) ||
+            rates.exists(_.triggered(t, now))
+        }
+        // only processed (kept) rows feed the rate window — shed rows
+        // are telemetry, so a throttled tenant recovers as its window
+        // drains; idle tenants' counters are dropped on this cadence
+        rates.foreach { rc =>
+          counts.foreach { case (t, n) => if (!shed.contains(t)) rc.add(t, n, now) }
+          rc.evictIdle(now)
         }
         // shed keys live in the tally's key space (NULL → "null"), so a
         // NULL-tenant row is kept unless "null" itself is shed
@@ -185,337 +185,79 @@ object CdcStream {
     stats
   }
 
-  /** One micro-batch of the RAW-WAL pipeline: harvest Relation messages
-    * into the cross-batch registry (driver state, like the reference's
-    * replication connection process), decode tuples against it, route all
-    * tables in one battery pass, deliver executor-side. `registry` is
-    * mutated — pass the same instance every batch. */
+  /** One micro-batch of the WAL pipeline, for any wire format: `format`
+    * harvests the batch's schemas into its cross-batch state and decodes
+    * the batch (pass the same instance every batch); the row-level changes
+    * then take one shared tail — one-pass multi-table battery match, TOAST
+    * merge by key absence (P8), per-(role, selected_columns) payload
+    * shaping, encode-once frame, subscriber explode, executor-side
+    * delivery. `nChanges` is the raw message count of the batch. */
   def processWalBatch(
       batch: DataFrame,
-      bytesCol: String,
-      orderCol: String,
+      format: WalFormat,
       subs: Seq[Subscription],
       bus: MemoryBus,
-      registry: scala.collection.mutable.Map[Int, PgOutput.RelationMeta],
-      batchId: Long = 0L): BatchStats = {
-    val spark = batch.sparkSession
-    val tBatch0 = System.nanoTime()
-    // two passes over the micro-batch (Relation harvest + decode)
-    val cached = batch.persist()
-    try {
-    // 1. Relation harvest: R messages are rare (one per table per
-    // connection, plus schema changes) — a driver collect of just those
-    // bytes is the small-dimension update, not a data-path collect. The
-    // batch row count rides the SAME aggregate (collect_list skips the
-    // non-R nulls), so harvest + count is one job, not two — per-batch
-    // job scheduling, not compute, is the knee cost at high rates.
-    // Ordering discipline: harvested R messages are applied in WAL (seq)
-    // order, never collect()/partition order. The decode below is seeded
-    // with the batch-START registry plus only the EARLIEST R per relation
-    // from this batch — later (schema-changing) R messages reach tuples
-    // through decodeIterator's in-stream, in-order application, so a tuple
-    // preceding a mid-batch schema change is decoded against the schema
-    // that was current at its position, not the newest one. (Residual
-    // caveat, documented: a tuple in partition A that follows — by seq —
-    // a schema-change R that landed in partition B still sees the older
-    // schema; on real slots Relation messages are re-sent per chunk, so
-    // partition-local streams carry their own R messages.)
-    val aggRow = cached.agg(
-        count(lit(1)).as("_n"),
-        collect_list(
-          when(substring(col(bytesCol), 1, 1) === lit("R".getBytes("UTF-8")),
-            struct(col(orderCol).cast("long").as("seq"),
-              col(bytesCol).as("b")))).as("_rels"))
-      .collect()(0)
-    val nChanges = aggRow.getLong(0)
-    val harvested = aggRow.getSeq[org.apache.spark.sql.Row](1)
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-      .sortBy(_._1)
-      .flatMap { case (_, b) => PgOutput.parseRelation(b) }
-    // first sighting seeds ONLY relations unknown at batch start — a
-    // known relation's mid-batch R must reach earlier tuples through
-    // in-stream order, not by pre-seeding (that would decode them
-    // against the future schema)
-    val seedFirst = scala.collection.mutable.Map[Int, PgOutput.RelationMeta]()
-    harvested.foreach(m =>
-      if (!registry.contains(m.id) && !seedFirst.contains(m.id))
-        seedFirst(m.id) = m)
-    val decodeSeed = registry.toMap ++ seedFirst
-    // the cross-batch registry advances to the LATEST R per relation (in
-    // seq order) so the NEXT batch starts from this batch's final schemas
-    harvested.foreach(m => registry(m.id) = m)
-    // 2. decode against the batch-start snapshot (+ first sightings);
-    // keep only row-level changes
-    val decoded = PgOutput.decodeChanges(cached, bytesCol, orderCol, decodeSeed)
-      .filter(c =>
-        c.message == "INSERT" || c.message == "UPDATE" ||
-        c.message == "DELETE" || c.message == "TRUNCATE")
-      .toDF()
-      .withColumnRenamed("message", Walrus.TypeCol)
-    // 3-5. shared tail: match, shape, deliver
-    val schemas = registry.values
-      .map(m => (m.namespace, m.name) -> PgOutput.sparkSchema(m)).toMap
-    val pkByTable = registry.values
-      .map(m => (m.namespace, m.name) ->
-        m.columns.filter(_.isKey).map(_.name)).toMap
-    matchShapeDeliver(decoded, schemas, pkByTable, subs, bus, batchId,
-      nChanges = nChanges, batchStartNs = tBatch0)
-    } finally cached.unpersist()
-  }
-
-  /** The source-agnostic tail of the WAL pipeline — identical for binary
-    * pgoutput and wal2json JSON batches once both land in the decoded
-    * WalChange shape: one-pass multi-table battery match, TOAST merge by
-    * key absence (P8), per-(role, selected_columns) payload shaping,
-    * encode-once frame, subscriber explode, executor-side delivery. */
-  private def matchShapeDeliver(
-      decoded: DataFrame,
-      schemas: Map[(String, String), StructType],
-      pkByTable: Map[(String, String), Seq[String]],
-      subs: Seq[Subscription],
-      bus: MemoryBus,
-      batchId: Long,
-      nChanges: Long = -1L,
-      batchStartNs: Long = -1L): BatchStats = {
-    val spark = decoded.sparkSession
-    val matched = graft.walrus.MultiTableMatch
-      .matchSubscriptions(decoded, schemas, subs)
-      .where(size(col("subscription_ids")) > 0)
-    // unchanged-TOAST fallback (P8): columns the decoder marked 'u' are
-    // absent from `record` and re-appear with their old values; columns
-    // explicitly set to SQL NULL stay NULL (merge is by key absence)
-    val toastMerged = matched.withColumn("record",
-      when(col("record").isNotNull && col("old_record").isNotNull,
-        Walrus.toastMerge(col("record"), col("old_record")))
-        .otherwise(col("record")))
-    val shaped = Payload.shapeGeneric(toastMerged, subs, pkByTable)
-    val deliveries = shaped
-      .withColumn("frame", concat(
-        lit("{\"type\":\""), col(Walrus.TypeCol),
-        lit("\",\"schema\":\""), col("change_schema"),
-        lit("\",\"table\":\""), col("change_table"),
-        lit("\",\"commit_timestamp\":\""), col("commit_timestamp"),
-        lit("\",\"record\":"), coalesce(col("record"), lit("null")),
-        lit(",\"old_record\":"), coalesce(col("old_record"), lit("null")),
-        lit("}")))
-      .select(explode(col("subscription_ids")).as("subscription_id"),
-        col("frame"))
-    val acc = spark.sparkContext.longAccumulator(s"graft.wal.deliveries.$batchId")
-    val sink: DeliverySink = bus
-    deliveries.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      var n = 0L
-      it.foreach { r => sink.offer(Delivery(r.getString(0), r.getString(1))); n += 1 }
-      sink.flush()
-      acc.add(n)
-    }
-    val stats = BatchStats(batchId, nChanges, acc.value, shed = false,
-      durationMs =
-        if (batchStartNs < 0L) -1L
-        else (System.nanoTime() - batchStartNs) / 1000000L)
-    bus.record(stats)
-    stats
-  }
-
-  /** One micro-batch of the wal2json pipeline. wal2json v2 rows are
-    * self-describing, so the schema "harvest" reads column names/types
-    * and pk lists from the rows themselves (small-dimension driver
-    * collect of DISTINCT tables, the analog of the Relation harvest) and
-    * folds them into the cross-batch `registry` — a late-arriving batch
-    * for a table with no rows this batch still matches via the registry.
-    */
-  def processWal2JsonBatch(
-      batch: DataFrame,
-      jsonCol: String,
-      orderCol: String,
-      subs: Seq[Subscription],
-      bus: MemoryBus,
-      registry: scala.collection.mutable.Map[(String, String),
-        (StructType, Seq[String])],
       batchId: Long = 0L): BatchStats = {
     val tBatch0 = System.nanoTime()
+    // two passes over the micro-batch (schema harvest + decode)
     val cached = batch.persist()
     try {
-      val raw = Wal2Json.decodeRaw(cached, jsonCol)
-      // schema harvest: aggregate to the LATEST (by seq) column/pk
-      // description PER TABLE executor-side, then collect one row per
-      // distinct table — the small dimension, never the change rows. The
-      // batch row count rides the same aggregate (per-group counts summed
-      // driver-side; schema-less groups — action M, malformed rows —
-      // contribute count but no registry entry, which is why max_by keys
-      // on a null-when-schema-less seq instead of a pre-filter): harvest
-      // + count is one job, not two.
-      val harvested = raw
-        .select(col(orderCol).cast("long").as("_seq"),
-          col("wal.schema").as("ns"), col("wal.table").as("tbl"),
-          col("wal.columns.name").as("names"),
-          col("wal.columns.type").as("types"),
-          col("pk_columns"))
-        .groupBy("ns", "tbl")
-        .agg(count(lit(1)).as("_n"),
-          max_by(struct(col("names"), col("types"), col("pk_columns")),
-            when(col("ns").isNotNull && col("names").isNotNull, col("_seq")))
-            .as("d"))
-        .collect()
-      val nChanges = harvested.map(_.getLong(2)).sum
-      harvested.foreach { r =>
-        val d = r.getStruct(3)
-        if (r.getString(0) != null && d != null && !d.isNullAt(0)) {
-          val names = d.getSeq[String](0)
-          val types = d.getSeq[String](1)
-          val pks = Option(d.getSeq[String](2)).getOrElse(Nil)
-          val st = StructType(names.zip(types).map { case (n, t) =>
-            org.apache.spark.sql.types.StructField(n, Wal2Json.sparkType(t))
-          })
-          registry((r.getString(0), r.getString(1))) = (st, pks)
-        }
-      }
-      val decoded = Wal2Json.decodeChanges(cached, jsonCol, orderCol)
-        .filter(c =>
-          c.message == "INSERT" || c.message == "UPDATE" ||
-          c.message == "DELETE" || c.message == "TRUNCATE")
-        .toDF()
-        .withColumnRenamed("message", Walrus.TypeCol)
-      matchShapeDeliver(decoded,
-        registry.map { case (k, v) => k -> v._1 }.toMap,
-        registry.map { case (k, v) => k -> v._2 }.toMap,
-        subs, bus, batchId, nChanges = nChanges, batchStartNs = tBatch0)
-    } finally cached.unpersist()
-  }
-
-  /** One micro-batch of the Debezium-envelope pipeline — the
-    * external-topic dialect of S1 ([[Debezium]] decode over e.g. a
-    * [[graft.sources.ReplayLog]] stream). The slim envelope carries
-    * column names but no types or pk metadata, so the schema "harvest"
-    * unions the observed record/old keys per table (all STRING — pass
-    * `schemaOverrides` for typed filter matching) and primary keys come
-    * from `pkByTable` (connector config in a real deployment; without an
-    * entry the payload path serves its no-pk 400 contract). Harvest +
-    * row count ride one aggregate job, as on the other WAL paths. */
-  def processDebeziumBatch(
-      batch: DataFrame,
-      jsonCol: String,
-      orderCol: String,
-      subs: Seq[Subscription],
-      bus: MemoryBus,
-      registry: scala.collection.mutable.Map[(String, String),
-        (StructType, Seq[String])],
-      pkByTable: Map[(String, String), Seq[String]] = Map.empty,
-      schemaOverrides: Map[(String, String), StructType] = Map.empty,
-      batchId: Long = 0L): BatchStats = {
-    val tBatch0 = System.nanoTime()
-    val cached = batch.persist()
-    try {
-      val decoded = Debezium.decodeChanges(cached, jsonCol, orderCol).toDF()
-      val harvested = decoded
-        .groupBy(col("change_schema").as("ns"), col("change_table").as("tbl"))
-        .agg(count(lit(1)).as("_n"),
-          array_distinct(flatten(collect_list(array_union(
-            coalesce(map_keys(col("record")),
-              array().cast("array<string>")),
-            array_union(
-              coalesce(map_keys(col("old_record")),
-                array().cast("array<string>")),
-              coalesce(col("unchanged_toast"),
-                array().cast("array<string>"))))))).as("cols"))
-        .collect()
-      val nChanges = harvested.map(_.getLong(2)).sum
-      harvested.foreach { r =>
-        val (ns, tbl) = (r.getString(0), r.getString(1))
-        if (ns != null && tbl != null) {
-          val st = schemaOverrides.getOrElse((ns, tbl),
-            StructType(r.getSeq[String](3).sorted
-              .map(org.apache.spark.sql.types.StructField(_,
-                org.apache.spark.sql.types.StringType))))
-          registry((ns, tbl)) = (st, pkByTable.getOrElse((ns, tbl), Nil))
-        }
-      }
-      val changes = decoded
+      val d = format.decode(cached)
+      val changes = d.changes.toDF()
         .where(col("message").isin("INSERT", "UPDATE", "DELETE", "TRUNCATE"))
         .withColumnRenamed("message", Walrus.TypeCol)
-      matchShapeDeliver(changes,
-        registry.map { case (k, v) => k -> v._1 }.toMap,
-        registry.map { case (k, v) => k -> v._2 }.toMap,
-        subs, bus, batchId, nChanges = nChanges, batchStartNs = tBatch0)
+      val matched = graft.walrus.MultiTableMatch
+        .matchSubscriptions(changes, d.tables.map { case (k, v) => k -> v._1 }, subs)
+        .where(size(col("subscription_ids")) > 0)
+      // unchanged-TOAST fallback (P8): columns the decoder marked 'u' are
+      // absent from `record` and re-appear with their old values; columns
+      // explicitly set to SQL NULL stay NULL (merge is by key absence)
+      val toastMerged = matched.withColumn("record",
+        when(col("record").isNotNull && col("old_record").isNotNull,
+          Walrus.toastMerge(col("record"), col("old_record")))
+          .otherwise(col("record")))
+      val deliveries = Payload
+        .shapeGeneric(toastMerged, subs, d.tables.map { case (k, v) => k -> v._2 })
+        .withColumn("frame", concat(
+          lit("{\"type\":\""), col(Walrus.TypeCol),
+          lit("\",\"schema\":\""), col("change_schema"),
+          lit("\",\"table\":\""), col("change_table"),
+          lit("\",\"commit_timestamp\":\""), col("commit_timestamp"),
+          lit("\",\"record\":"), coalesce(col("record"), lit("null")),
+          lit(",\"old_record\":"), coalesce(col("old_record"), lit("null")),
+          lit("}")))
+        .select(explode(col("subscription_ids")).as("subscription_id"),
+          col("frame"))
+      val acc = batch.sparkSession.sparkContext
+        .longAccumulator(s"graft.wal.deliveries.$batchId")
+      val sink: DeliverySink = bus
+      deliveries.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+        var n = 0L
+        it.foreach { r => sink.offer(Delivery(r.getString(0), r.getString(1))); n += 1 }
+        sink.flush()
+        acc.add(n)
+      }
+      val stats = BatchStats(batchId, d.nMessages, acc.value, shed = false,
+        durationMs = (System.nanoTime() - tBatch0) / 1000000L)
+      bus.record(stats)
+      stats
     } finally cached.unpersist()
   }
 
-  /** Attach the Debezium-envelope pipeline to a streaming DataFrame —
-    * same downstream as [[startWal2Json]], envelope decode + config-fed
-    * pk metadata instead of self-describing rows. */
-  def startDebezium(
-      msgs: DataFrame,
-      jsonCol: String,
-      orderCol: String,
-      subs: Seq[Subscription],
-      bus: MemoryBus,
-      pkByTable: Map[(String, String), Seq[String]] = Map.empty,
-      schemaOverrides: Map[(String, String), StructType] = Map.empty,
-      triggerMs: Long = 100L,
-      checkpointLocation: Option[String] = None): StreamingQuery = {
-    val registry = scala.collection.mutable
-      .Map[(String, String), (StructType, Seq[String])]()
-    val w = msgs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDebeziumBatch(batch, jsonCol, orderCol, subs, bus, registry,
-          pkByTable, schemaOverrides, batchId)
-        ()
-      }
-    checkpointLocation.foreach(loc => w.option("checkpointLocation", loc))
-    w.start()
-  }
-
-  /** Attach the wal2json pipeline (format-v2 JSON rows in, per-subscriber
-    * frames out) to a streaming DataFrame — the same downstream as
-    * [[startWal]], different source decode. */
-  def startWal2Json(
-      msgs: DataFrame,
-      jsonCol: String,
-      orderCol: String,
-      subs: Seq[Subscription],
-      bus: MemoryBus,
-      triggerMs: Long = 100L,
-      checkpointLocation: Option[String] = None): StreamingQuery = {
-    val registry = scala.collection.mutable
-      .Map[(String, String), (StructType, Seq[String])]()
-    val w = msgs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processWal2JsonBatch(batch, jsonCol, orderCol, subs, bus, registry,
-          batchId)
-        ()
-      }
-    checkpointLocation.foreach(loc => w.option("checkpointLocation", loc))
-    w.start()
-  }
-
-  /** Attach the full raw-WAL pipeline (binary pgoutput frames in,
-    * per-subscriber frames out) to a streaming DataFrame of
-    * (orderCol, bytesCol) messages. The relation registry persists across
-    * micro-batches in driver state. */
+  /** Attach the WAL pipeline ([[processWalBatch]]) to a streaming
+    * DataFrame of `format`'s messages. `format`'s schema state persists
+    * across micro-batches in driver state; delivery semantics by
+    * checkpoint mode are those of [[start]]. */
   def startWal(
       msgs: DataFrame,
-      bytesCol: String,
-      orderCol: String,
+      format: WalFormat,
       subs: Seq[Subscription],
       bus: MemoryBus,
       triggerMs: Long = 100L,
-      initialRegistry: Map[Int, PgOutput.RelationMeta] = Map.empty,
-      checkpointLocation: Option[String] = None): StreamingQuery = {
-    val registry =
-      scala.collection.mutable.Map[Int, PgOutput.RelationMeta]() ++ initialRegistry
-    val w = msgs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processWalBatch(batch, bytesCol, orderCol, subs, bus, registry, batchId)
-        ()
-      }
-    checkpointLocation.foreach(loc => w.option("checkpointLocation", loc))
-    w.start()
-  }
+      checkpointLocation: Option[String] = None): StreamingQuery =
+    attach(msgs, triggerMs, checkpointLocation) { (batch, batchId) =>
+      processWalBatch(batch, format, subs, bus, batchId)
+    }
 
   /** The CDC pipeline under ADAPTIVE poll cadence (O9): a daemon-thread
     * poll loop — immediate re-poll while draining, jittered interval while
@@ -538,81 +280,49 @@ object CdcStream {
       rates: Option[graft.rates.TenantRateCounters] = None,
       deliverTo: Option[DeliverySink] = None,
       maxPolls: Long = Long.MaxValue,
-      backoff: RetryBackoff = new RetryBackoff()): PollHandle = {
-    val flag = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val batchId = new java.util.concurrent.atomic.AtomicLong(0L)
-    val processFn: DataFrame => (Long, Long) = { batch =>
-      // stats come straight back from the call — never re-read from the
-      // bus (O(n) queue copy per poll, and wrong under a shared bus)
-      val s = processBatch(batch, subs, dataSchema, table, pk, bus,
-        batchId.getAndIncrement(), tenantCol, tenantLimits,
-        defaultTenantLimit, rates, deliverTo = deliverTo)
-      (s.nChanges - s.shedTenants.values.sum, s.nChanges)
+      backoff: RetryBackoff = new RetryBackoff()): PollHandle =
+    spawnPoll(s"graft-adaptive-poll-$table", pollFn, pacer, maxPolls, backoff) {
+      (batch, batchId) =>
+        // stats come straight back from the call — never re-read from the
+        // bus (O(n) queue copy per poll, and wrong under a shared bus)
+        val s = processBatch(batch, subs, dataSchema, table, pk, bus, batchId,
+          tenantCol, tenantLimits, defaultTenantLimit, rates, deliverTo = deliverTo)
+        (s.nChanges - s.shedTenants.values.sum, s.nChanges)
     }
-    AdaptivePoll.spawn(s"graft-adaptive-poll-$table", pollFn, processFn,
-      pacer, flag, maxPolls, backoff)
-  }
 
-  /** Adaptive cadence on the wal2json path — the faithful pairing: the
+  /** Adaptive cadence on the WAL pipeline — the faithful pairing: the
     * reference's poller IS a wal2json poll loop. Each iteration decodes
-    * one slot chunk through [[processWal2JsonBatch]] (registry persists
-    * across polls); chunks that produced deliveries re-poll immediately,
-    * chunks with slot records but no interested subscriber space out on
-    * the jittered arm, and empty polls back off
-    * ×[[PollPacer.idleMultiplier]]. */
-  def startAdaptivePollWal2Json(
-      pollFn: () => DataFrame,
-      jsonCol: String,
-      orderCol: String,
-      subs: Seq[Subscription],
-      bus: MemoryBus,
-      pacer: PollPacer,
-      maxPolls: Long = Long.MaxValue,
-      backoff: RetryBackoff = new RetryBackoff()): PollHandle = {
-    val flag = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val batchId = new java.util.concurrent.atomic.AtomicLong(0L)
-    val registry = scala.collection.mutable
-      .Map[(String, String), (StructType, Seq[String])]()
-    val processFn: DataFrame => (Long, Long) = { batch =>
-      val s = processWal2JsonBatch(batch, jsonCol, orderCol, subs, bus,
-        registry, batchId.getAndIncrement())
-      // processed := frames delivered (slot rows with no interested
-      // subscriber take the jittered arm — no one is waiting, no rush);
-      // slotChanges := raw slot messages, like the reference's
-      // slot_changes_count (begin/commit/relation records included)
-      (s.nDeliveries, s.nChanges)
-    }
-    AdaptivePoll.spawn("graft-adaptive-poll-wal2json", pollFn, processFn,
-      pacer, flag, maxPolls, backoff)
-  }
-
-  /** Adaptive cadence on the binary pgoutput path — same loop as
-    * [[startAdaptivePollWal2Json]], different source decode: each chunk
-    * runs through [[processWalBatch]] with the relation registry
-    * persisting across polls. Same pacing mapping: delivered frames
-    * drain hot, slot records without an interested subscriber (or
-    * Relation-only chunks) space out jittered, empty polls back off. */
+    * one slot chunk through [[processWalBatch]] (`format`'s schema state
+    * persists across polls); chunks that produced deliveries re-poll
+    * immediately, chunks with slot records but no interested subscriber
+    * (or Relation-only chunks) space out on the jittered arm, and empty
+    * polls back off ×[[PollPacer.idleMultiplier]]. */
   def startAdaptivePollWal(
       pollFn: () => DataFrame,
-      bytesCol: String,
-      orderCol: String,
+      format: WalFormat,
       subs: Seq[Subscription],
       bus: MemoryBus,
       pacer: PollPacer,
       maxPolls: Long = Long.MaxValue,
-      backoff: RetryBackoff = new RetryBackoff(),
-      initialRegistry: Map[Int, PgOutput.RelationMeta] = Map.empty): PollHandle = {
-    val flag = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val batchId = new java.util.concurrent.atomic.AtomicLong(0L)
-    val registry =
-      scala.collection.mutable.Map[Int, PgOutput.RelationMeta]() ++ initialRegistry
-    val processFn: DataFrame => (Long, Long) = { batch =>
-      val s = processWalBatch(batch, bytesCol, orderCol, subs, bus, registry,
-        batchId.getAndIncrement())
-      (s.nDeliveries, s.nChanges)
+      backoff: RetryBackoff = new RetryBackoff()): PollHandle =
+    spawnPoll("graft-adaptive-poll-wal", pollFn, pacer, maxPolls, backoff) {
+      (batch, batchId) =>
+        val s = processWalBatch(batch, format, subs, bus, batchId)
+        // processed := frames delivered (slot rows with no interested
+        // subscriber take the jittered arm — no one is waiting, no rush);
+        // slotChanges := raw slot messages, like the reference's
+        // slot_changes_count (begin/commit/relation records included)
+        (s.nDeliveries, s.nChanges)
     }
-    AdaptivePoll.spawn("graft-adaptive-poll-pgoutput", pollFn, processFn,
-      pacer, flag, maxPolls, backoff)
+
+  /** Run `process` on every polled batch, numbering the batches from 0,
+    * on a daemon poll loop ([[AdaptivePoll.spawn]]). */
+  private def spawnPoll(name: String, pollFn: () => DataFrame, pacer: PollPacer,
+      maxPolls: Long, backoff: RetryBackoff)(
+      process: (DataFrame, Long) => (Long, Long)): PollHandle = {
+    val batchId = new java.util.concurrent.atomic.AtomicLong(0L)
+    AdaptivePoll.spawn(name, pollFn, batch => process(batch, batchId.getAndIncrement()),
+      pacer, new java.util.concurrent.atomic.AtomicBoolean(true), maxPolls, backoff)
   }
 
   /** Attach the CDC pipeline to a streaming change DataFrame.
@@ -641,16 +351,21 @@ object CdcStream {
       tenantLimits: Map[String, Long] = Map.empty,
       rates: Option[graft.rates.TenantRateCounters] = None,
       deliverTo: Option[DeliverySink] = None,
-      checkpointLocation: Option[String] = None): StreamingQuery = {
-    val w = changes.writeStream
+      checkpointLocation: Option[String] = None): StreamingQuery =
+    attach(changes, triggerMs, checkpointLocation) { (batch, batchId) =>
+      processBatch(batch, subs, dataSchema, table, pk, bus, batchId,
+        tenantCol, tenantLimits, maxEventsPerBatch, rates, deliverTo = deliverTo)
+    }
+
+  /** Run `process` on every micro-batch of `input` (append mode, fixed
+    * processing-time trigger, optional checkpoint). */
+  private def attach(input: DataFrame, triggerMs: Long,
+      checkpointLocation: Option[String])(
+      process: (DataFrame, Long) => BatchStats): StreamingQuery = {
+    val w = input.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, subs, dataSchema, table, pk, bus, batchId,
-          tenantCol, tenantLimits, maxEventsPerBatch, rates,
-          deliverTo = deliverTo)
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => process(batch, batchId); () }
     checkpointLocation.foreach(loc => w.option("checkpointLocation", loc))
     w.start()
   }

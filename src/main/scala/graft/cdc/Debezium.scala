@@ -116,4 +116,46 @@ object Debezium {
           array().cast("array<string>")).as("unchanged_toast"))
       .as[PgOutput.WalChange]
   }
+
+  /** The Debezium-envelope [[WalFormat]]: `jsonCol` carries one envelope,
+    * `orderCol` its transport order (e.g. a [[graft.sources.ReplayLog]]
+    * offset). The slim envelope carries column names but no types or pk
+    * metadata, so the schema "harvest" unions the observed record/old keys
+    * per table into the cross-batch `tables` (all STRING — pass
+    * `schemaOverrides` for typed filter matching) and primary keys come
+    * from `pkByTable` (connector config in a real deployment; without an
+    * entry the payload path serves its no-pk 400 contract). Harvest + row
+    * count ride one aggregate job, as on the other formats. */
+  final class Format(jsonCol: String, orderCol: String,
+      pkByTable: Map[(String, String), Seq[String]] = Map.empty,
+      schemaOverrides: Map[(String, String), StructType] = Map.empty)
+      extends WalFormat {
+    private val tables =
+      scala.collection.mutable.Map.empty[(String, String), (StructType, Seq[String])]
+
+    def decode(batch: DataFrame): WalFormat.Decoded = {
+      val decoded = decodeChanges(batch, jsonCol, orderCol)
+      val harvested = decoded
+        .groupBy(col("change_schema").as("ns"), col("change_table").as("tbl"))
+        .agg(count(lit(1)).as("_n"),
+          array_distinct(flatten(collect_list(array_union(
+            coalesce(map_keys(col("record")),
+              array().cast("array<string>")),
+            array_union(
+              coalesce(map_keys(col("old_record")),
+                array().cast("array<string>")),
+              coalesce(col("unchanged_toast"),
+                array().cast("array<string>"))))))).as("cols"))
+        .collect()
+      harvested.foreach { r =>
+        val (ns, tbl) = (r.getString(0), r.getString(1))
+        if (ns != null && tbl != null) {
+          val st = schemaOverrides.getOrElse((ns, tbl),
+            StructType(r.getSeq[String](3).sorted.map(StructField(_, StringType))))
+          tables((ns, tbl)) = (st, pkByTable.getOrElse((ns, tbl), Nil))
+        }
+      }
+      WalFormat.Decoded(decoded, harvested.map(_.getLong(2)).sum, tables.toMap)
+    }
+  }
 }

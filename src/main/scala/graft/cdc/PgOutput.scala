@@ -625,4 +625,63 @@ object PgOutput {
       .as[(Long, Array[Byte])]
       .mapPartitions(it => decodeIterator(it, initial))
   }
+
+  /** The binary pgoutput [[WalFormat]]: `bytesCol` carries one protocol
+    * message, `orderCol` its WAL order. `relations` is the cross-batch
+    * relation registry (driver state, like the reference's replication
+    * connection process), seeded with `initialRegistry` — relations
+    * learned before the stream attached. */
+  final class Format(bytesCol: String, orderCol: String,
+      initialRegistry: Map[Int, RelationMeta] = Map.empty) extends WalFormat {
+    val relations: mutable.Map[Int, RelationMeta] =
+      mutable.Map.empty[Int, RelationMeta] ++ initialRegistry
+
+    def decode(batch: DataFrame): WalFormat.Decoded = {
+      // Relation harvest: R messages are rare (one per table per
+      // connection, plus schema changes) — a driver collect of just those
+      // bytes is the small-dimension update, not a data-path collect. The
+      // batch row count rides the SAME aggregate (collect_list skips the
+      // non-R nulls), so harvest + count is one job, not two — per-batch
+      // job scheduling, not compute, is the knee cost at high rates.
+      // Ordering discipline: harvested R messages are applied in WAL (seq)
+      // order, never collect()/partition order. The decode below is seeded
+      // with the batch-START registry plus only the EARLIEST R per relation
+      // from this batch — later (schema-changing) R messages reach tuples
+      // through decodeIterator's in-stream, in-order application, so a tuple
+      // preceding a mid-batch schema change is decoded against the schema
+      // that was current at its position, not the newest one. (Residual
+      // caveat, documented: a tuple in partition A that follows — by seq —
+      // a schema-change R that landed in partition B still sees the older
+      // schema; on real slots Relation messages are re-sent per chunk, so
+      // partition-local streams carry their own R messages.)
+      val aggRow = batch.agg(
+          count(lit(1)).as("_n"),
+          collect_list(
+            when(substring(col(bytesCol), 1, 1) === lit("R".getBytes(UTF_8)),
+              struct(col(orderCol).cast("long").as("seq"),
+                col(bytesCol).as("b")))).as("_rels"))
+        .collect()(0)
+      val harvested = aggRow.getSeq[org.apache.spark.sql.Row](1)
+        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
+        .sortBy(_._1)
+        .flatMap { case (_, b) => parseRelation(b) }
+      // first sighting seeds ONLY relations unknown at batch start — a
+      // known relation's mid-batch R must reach earlier tuples through
+      // in-stream order, not by pre-seeding (that would decode them
+      // against the future schema)
+      val seedFirst = mutable.Map[Int, RelationMeta]()
+      harvested.foreach(m =>
+        if (!relations.contains(m.id) && !seedFirst.contains(m.id))
+          seedFirst(m.id) = m)
+      val decodeSeed = relations.toMap ++ seedFirst
+      // the cross-batch registry advances to the LATEST R per relation (in
+      // seq order) so the NEXT batch starts from this batch's final schemas
+      harvested.foreach(m => relations(m.id) = m)
+      // decode against the batch-start snapshot (+ first sightings)
+      WalFormat.Decoded(decodeChanges(batch, bytesCol, orderCol, decodeSeed),
+        aggRow.getLong(0),
+        relations.values.map(m => (m.namespace, m.name) ->
+          (sparkSchema(m), m.columns.filter(_.isKey).map(_.name))).toMap)
+    }
+  }
 }

@@ -165,6 +165,54 @@ object Wal2Json {
       .withColumn("pk_columns",
         transform(col("wal.pk"), p => p.getField("name")))
 
+  /** The wal2json v2 [[WalFormat]]: `jsonCol` carries one wal2json row,
+    * `orderCol` its WAL order. The rows are self-describing, so the schema
+    * "harvest" reads column names/types and pk lists from the rows
+    * themselves (the analog of the pgoutput Relation harvest) and folds
+    * them into the cross-batch `tables` — a later batch with no schema rows
+    * for a table still matches via the registry. */
+  final class Format(jsonCol: String, orderCol: String) extends WalFormat {
+    private val tables =
+      scala.collection.mutable.Map.empty[(String, String), (StructType, Seq[String])]
+
+    def decode(batch: DataFrame): WalFormat.Decoded = {
+      // schema harvest: aggregate to the LATEST (by seq) column/pk
+      // description PER TABLE executor-side, then collect one row per
+      // distinct table — the small dimension, never the change rows. The
+      // batch row count rides the same aggregate (per-group counts summed
+      // driver-side; schema-less groups — action M, malformed rows —
+      // contribute count but no registry entry, which is why max_by keys
+      // on a null-when-schema-less seq instead of a pre-filter): harvest
+      // + count is one job, not two.
+      val harvested = decodeRaw(batch, jsonCol)
+        .select(col(orderCol).cast("long").as("_seq"),
+          col("wal.schema").as("ns"), col("wal.table").as("tbl"),
+          col("wal.columns.name").as("names"),
+          col("wal.columns.type").as("types"),
+          col("pk_columns"))
+        .groupBy("ns", "tbl")
+        .agg(count(lit(1)).as("_n"),
+          max_by(struct(col("names"), col("types"), col("pk_columns")),
+            when(col("ns").isNotNull && col("names").isNotNull, col("_seq")))
+            .as("d"))
+        .collect()
+      harvested.foreach { r =>
+        val d = r.getStruct(3)
+        if (r.getString(0) != null && d != null && !d.isNullAt(0)) {
+          val names = d.getSeq[String](0)
+          val types = d.getSeq[String](1)
+          val pks = Option(d.getSeq[String](2)).getOrElse(Nil)
+          val st = StructType(names.zip(types).map { case (n, t) =>
+            StructField(n, sparkType(t))
+          })
+          tables((r.getString(0), r.getString(1))) = (st, pks)
+        }
+      }
+      WalFormat.Decoded(decodeChanges(batch, jsonCol, orderCol),
+        harvested.map(_.getLong(2)).sum, tables.toMap)
+    }
+  }
+
   /** `realtime.quote_wal2json` — the LIVE semantics
     * (…/20260528120000_wal2json_escape_special_chars.ex:7-33, which
     * REPLACED the 2021 `20211116050929…` function): each identifier

@@ -103,8 +103,8 @@ object ReplayLog {
     * (/root/reference/lib/extensions/postgres_cdc_rls/replication_poller.ex:149-232):
     * each call reads up to `maxRecords` past the tracked cursor (the
     * consumer-side slot position) and advances it, returning an empty
-    * frame when idle — exactly the contract `startAdaptivePollWal2Json`
-    * and friends pace on. The returned frame carries
+    * frame when idle — exactly the contract `CdcStream.startAdaptivePoll`
+    * and `CdcStream.startAdaptivePollWal` pace on. The returned frame carries
     * `(seq, topic, partition, offset, key, value)` with `seq` a
     * poll-order monotone (partition-major within a poll) for the decode
     * order column. Driver-side and poll-cap-bounded by construction —

@@ -108,6 +108,14 @@ object Payload {
           .where(col("claims_role").isNotNull)
     }
 
+  /** `subs` grouped by (role, sorted selected columns), in a fixed
+    * order. Option(role): a null role sorts first instead of throwing;
+    * its group is built and then dropped (no role, no delivery). */
+  private def byPayloadGroup(subs: Seq[Subscription])
+      : Seq[((String, Seq[String]), Seq[Subscription])] =
+    subs.groupBy(s => (s.claimsRole, s.selectedColumns.sorted)).toSeq
+      .sortBy { case ((role, sel), _) => (Option(role), sel.mkString(",")) }
+
   /** The per-change payload-group column of [[shape]] over rows of
     * `schema` (which carries `subscription_ids`): an array of
     * `struct(claims_role, selected_columns, record, old_record, errors,
@@ -124,10 +132,7 @@ object Payload {
       maxBytes: Int = 1 << 20,
       unauthorizedRoles: Set[String] = Set.empty,
       rlsEnabled: Boolean = false): Option[Column] = {
-    // Option(role): a null role sorts first instead of throwing; its
-    // group is built and then dropped (no role, no delivery)
-    val groups = subs.groupBy(s => (s.claimsRole, s.selectedColumns.sorted)).toSeq
-      .sortBy { case ((role, sel), _) => (Option(role), sel.mkString(",")) }
+    val groups = byPayloadGroup(subs)
     val hasOld = schema.fieldNames.exists(_.startsWith("old_"))
     val noPk = pk.isEmpty
     val isIns = col(Walrus.TypeCol) === "INSERT"
@@ -202,8 +207,7 @@ object Payload {
       subs: Seq[Subscription],
       pkByTable: Map[(String, String), Seq[String]],
       rlsEnabled: Boolean = false): DataFrame = {
-    val groups = subs.groupBy(s => (s.claimsRole, s.selectedColumns.sorted)).toSeq
-      .sortBy { case ((role, sel), _) => (role, sel.mkString(",")) }
+    val groups = byPayloadGroup(subs)
     val isIns = col(Walrus.TypeCol) === "INSERT"
     val isUpd = col(Walrus.TypeCol) === "UPDATE"
     val isDel = col(Walrus.TypeCol) === "DELETE"

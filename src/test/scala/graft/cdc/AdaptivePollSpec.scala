@@ -141,26 +141,37 @@ class AdaptivePollSpec extends SparkSpec {
          |"columns":[{"name":"id","type":"bigint","typeoid":20,"value":$id},
          | {"name":"amount","type":"double precision","typeoid":701,"value":$amount}],
          |"pk":[{"name":"id","type":"bigint"}]}""".stripMargin.replace("\n", ""))
-    val bus = CdcStream.MemoryBus()
-    val polls = new java.util.concurrent.atomic.AtomicLong(0L)
-    val pollFn = () => (polls.getAndIncrement() match {
-      case 0L => Seq(ins(0L, 1, 250.0), ins(1L, 2, 50.0))
-      case 1L => Seq(ins(2L, 3, 75.0))
-      case _  => Seq.empty[(Long, String)]
-    }).toDF("seq", "w2j")
-    val h = CdcStream.startAdaptivePollWal2Json(pollFn, "w2j", "seq",
-      walSubs, bus, new PollPacer(50L), maxPolls = 3L)
-    try {
-      val deadline = System.currentTimeMillis() + 30000L
-      while (h.isRunning && System.currentTimeMillis() < deadline)
-        Thread.sleep(50L)
-      assert(!h.isRunning, "loop should complete maxPolls and exit")
-      assert(bus.deliveries.size == 3, s"3 inserts delivered to sAll")
-      // wal telemetry is now real: nChanges counts polled messages and
-      // the batch duration is measured
-      assert(bus.batches.map(_.nChanges).sorted == Seq(0L, 1L, 2L))
-      assert(bus.batches.forall(_.durationMs >= 0L))
-    } finally h.stop()
+    // the same inserts as Debezium envelopes: the one poll loop serves
+    // every WAL format
+    def dbz(seq: Long, id: Int, amount: Double): (Long, String) = (seq,
+      s"""{"before":null,"after":{"id":$id,"amount":$amount},""" +
+        s""""source":{"schema":"public","table":"orders","ts_ms":${seq * 1000},""" +
+        s""""lsn":$seq,"txId":1},"op":"c","ts_ms":0}""")
+    for ((row, format) <- Seq[((Long, Int, Double) => (Long, String), WalFormat)](
+        (ins, new Wal2Json.Format("w2j", "seq")),
+        (dbz, new Debezium.Format("w2j", "seq",
+          pkByTable = Map(("public", "orders") -> Seq("id")))))) {
+      val bus = CdcStream.MemoryBus()
+      val polls = new java.util.concurrent.atomic.AtomicLong(0L)
+      val pollFn = () => (polls.getAndIncrement() match {
+        case 0L => Seq(row(0L, 1, 250.0), row(1L, 2, 50.0))
+        case 1L => Seq(row(2L, 3, 75.0))
+        case _  => Seq.empty[(Long, String)]
+      }).toDF("seq", "w2j")
+      val h = CdcStream.startAdaptivePollWal(pollFn, format,
+        walSubs, bus, new PollPacer(50L), maxPolls = 3L)
+      try {
+        val deadline = System.currentTimeMillis() + 30000L
+        while (h.isRunning && System.currentTimeMillis() < deadline)
+          Thread.sleep(50L)
+        assert(!h.isRunning, "loop should complete maxPolls and exit")
+        assert(bus.deliveries.size == 3, s"3 inserts delivered to sAll")
+        // wal telemetry is now real: nChanges counts polled messages and
+        // the batch duration is measured
+        assert(bus.batches.map(_.nChanges).sorted == Seq(0L, 1L, 2L))
+        assert(bus.batches.forall(_.durationMs >= 0L))
+      } finally h.stop()
+    }
   }
 
   test("adaptive poll over the replay-log transport: the cursor is the " +
@@ -178,9 +189,10 @@ class AdaptivePollSpec extends SparkSpec {
     val bus = CdcStream.MemoryBus()
     // cap 2 per poll: 5 records need 3 busy polls; a 4th returns empty
     val poll = ReplayLog.pollFn(spark, topic, maxRecords = 2)
-    val h = CdcStream.startAdaptivePollWal2Json(
+    val h = CdcStream.startAdaptivePollWal(
       (() => poll().selectExpr("seq", "cast(value as string) as w2j")),
-      "w2j", "seq", walSubs, bus, new PollPacer(50L), maxPolls = 4L)
+      new Wal2Json.Format("w2j", "seq"), walSubs, bus, new PollPacer(50L),
+      maxPolls = 4L)
     try {
       val deadline = System.currentTimeMillis() + 30000L
       while (h.isRunning && System.currentTimeMillis() < deadline)
@@ -213,8 +225,8 @@ class AdaptivePollSpec extends SparkSpec {
         (2L, PgOutput.encodeInsert(7, Seq(TText("2"), TText("50.0")))))
       case _ => Seq.empty[(Long, Array[Byte])]
     }).toDF("seq", "msg")
-    val h = CdcStream.startAdaptivePollWal(pollFn, "msg", "seq", walSubs,
-      bus, new PollPacer(50L), maxPolls = 3L)
+    val h = CdcStream.startAdaptivePollWal(pollFn, new PgOutput.Format("msg", "seq"),
+      walSubs, bus, new PollPacer(50L), maxPolls = 3L)
     try {
       val deadline = System.currentTimeMillis() + 30000L
       while (h.isRunning && System.currentTimeMillis() < deadline)

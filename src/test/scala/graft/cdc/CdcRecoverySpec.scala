@@ -112,11 +112,11 @@ class CdcRecoverySpec extends SparkSpec {
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("seq", "wal_json").coalesce(1)
         .write.mode("append").parquet(src)
-    def attach() = CdcStream.startWal2Json(
+    def attach() = CdcStream.startWal(
       spark.readStream
         .schema(Seq.empty[(Long, String)].toDF("seq", "wal_json").schema)
         .parquet(src),
-      "wal_json", "seq", subs, bus, triggerMs = 10L,
+      new Wal2Json.Format("wal_json", "seq"), subs, bus, triggerMs = 10L,
       checkpointLocation = Some(ckpt))
     write(Seq(row(1, 1, 60.0), row(2, 2, 10.0)))
     val q1 = attach()

@@ -111,25 +111,28 @@ class CdcStreamSpec extends SparkSpec {
     val tSchema = Seq.empty[TChange].toDS().toDF()
       .drop("change_type", "commit_timestamp").schema
     val tSubs = Seq(Subscription("sAll", "public", "t", Nil))
-    // 10 s window, cap 1 event/s per tenant
-    val rc = new graft.rates.TenantRateCounters(10, defaultLimitPerSec = 1.0)
-    def mkBatch(ids: Range) = ids.map(i =>
-      TChange(i, "tA", "INSERT", 60.0, "2024-01-01T00:00:00.000Z")).toDF()
-    def process(ids: Range, atSec: Long, batchId: Long, bus: CdcStream.MemoryBus) =
-      CdcStream.processBatch(mkBatch(ids), tSubs, tSchema, "t", Seq("id"),
-        bus, batchId, tenantCol = Some("tenant"), rates = Some(rc),
-        nowMs = atSec * 1000)
-    val bus = CdcStream.MemoryBus()
-    // t=0: 50 rows — counter was empty, batch delivered, window now 5/s
-    process(1 to 50, 0L, 0L, bus)
-    assert(bus.batches.last.nDeliveries == 50 && !bus.batches.last.shed)
-    // t=1: rate 5/s > 1/s → shed, and shed rows do NOT feed the window
-    process(51 to 52, 1L, 1L, bus)
-    assert(bus.batches.last.shed &&
-      bus.batches.last.shedTenants == Map("tA" -> 2L))
-    // t=20: the 10 s window drained → tenant recovers
-    process(53 to 54, 20L, 2L, bus)
-    assert(!bus.batches.last.shed && bus.batches.last.nDeliveries == 2)
+    // with no tenant column the whole batch is the one tenant "*"
+    for ((tenantCol, key) <- Seq(Some("tenant") -> "tA", None -> "*")) {
+      // 10 s window, cap 1 event/s per tenant
+      val rc = new graft.rates.TenantRateCounters(10, defaultLimitPerSec = 1.0)
+      def mkBatch(ids: Range) = ids.map(i =>
+        TChange(i, "tA", "INSERT", 60.0, "2024-01-01T00:00:00.000Z")).toDF()
+      def process(ids: Range, atSec: Long, batchId: Long, bus: CdcStream.MemoryBus) =
+        CdcStream.processBatch(mkBatch(ids), tSubs, tSchema, "t", Seq("id"),
+          bus, batchId, tenantCol = tenantCol, rates = Some(rc),
+          nowMs = atSec * 1000)
+      val bus = CdcStream.MemoryBus()
+      // t=0: 50 rows — counter was empty, batch delivered, window now 5/s
+      process(1 to 50, 0L, 0L, bus)
+      assert(bus.batches.last.nDeliveries == 50 && !bus.batches.last.shed)
+      // t=1: rate 5/s > 1/s → shed, and shed rows do NOT feed the window
+      process(51 to 52, 1L, 1L, bus)
+      assert(bus.batches.last.shed &&
+        bus.batches.last.shedTenants == Map(key -> 2L), s"tenantCol=$tenantCol")
+      // t=20: the 10 s window drained → tenant recovers
+      process(53 to 54, 20L, 2L, bus)
+      assert(!bus.batches.last.shed && bus.batches.last.nDeliveries == 2)
+    }
   }
 
   test("raw-WAL stream: registry persists across micro-batches") {
@@ -143,7 +146,7 @@ class CdcStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val bus = CdcStream.MemoryBus()
     val q = CdcStream.startWal(input.toDF().toDF("seq", "msg"),
-      "msg", "seq", walSubs, bus, triggerMs = 10L)
+      new PgOutput.Format("msg", "seq"), walSubs, bus, triggerMs = 10L)
     try {
       // batch 1: Relation + one big insert
       input.addData(
@@ -191,8 +194,8 @@ class CdcStreamSpec extends SparkSpec {
          |"pk":[{"name":"id","type":"bigint"}]}""".stripMargin.replace("\n", ""))
     val input = MemoryStream[(Long, String)](spark)
     val bus = CdcStream.MemoryBus()
-    val q = CdcStream.startWal2Json(input.toDF().toDF("seq", "w2j"),
-      "w2j", "seq", walSubs, bus, triggerMs = 10L)
+    val q = CdcStream.startWal(input.toDF().toDF("seq", "w2j"),
+      new Wal2Json.Format("w2j", "seq"), walSubs, bus, triggerMs = 10L)
     try {
       input.addData(ins(0L, 1, 250.0))
       q.processAllAvailable()
@@ -240,9 +243,9 @@ class CdcStreamSpec extends SparkSpec {
       (2L, PgOutput.encodeRelation(v2)),
       (3L, PgOutput.encodeInsert(7, Seq(TText("2"), TText("30000")))))
       .toDF("seq", "msg").repartition(1)
-    val registry = scala.collection.mutable.Map(7 -> v1)
+    val format = new PgOutput.Format("msg", "seq", initialRegistry = Map(7 -> v1))
     val bus = CdcStream.MemoryBus()
-    CdcStream.processWalBatch(batch, "msg", "seq", walSubs, bus, registry)
+    CdcStream.processWalBatch(batch, format, walSubs, bus)
     val frames = bus.deliveries.map(_.frame).sorted
     // seq-1 tuple precedes the schema change → decoded against v1, even
     // though the harvest saw v2 before decode ran
@@ -252,7 +255,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(frames.exists(f => f.contains("\"id\":\"2\"") &&
       f.contains("\"amount_cents\":\"30000\"")))
     // the cross-batch registry advanced to v2 for the next batch
-    assert(registry(7).columns.map(_.name) == Seq("id", "amount_cents"))
+    assert(format.relations(7).columns.map(_.name) == Seq("id", "amount_cents"))
   }
 
   test("raw-WAL frames project selected columns per subscription group") {
@@ -268,7 +271,7 @@ class CdcStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, Array[Byte])](spark)
     val bus = CdcStream.MemoryBus()
     val q = CdcStream.startWal(input.toDF().toDF("seq", "msg"),
-      "msg", "seq", walSubs, bus, triggerMs = 10L)
+      new PgOutput.Format("msg", "seq"), walSubs, bus, triggerMs = 10L)
     try {
       input.addData(
         (0L, PgOutput.encodeRelation(rel)),

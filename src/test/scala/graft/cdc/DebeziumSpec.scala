@@ -58,11 +58,11 @@ class DebeziumSpec extends SparkSpec {
         """{"id":1,"v":"a","blob":"B0"}"""),
       env("d", "null", """{"id":1,"v":"a2"}""")
     ).foreach(j => ReplayLog.append(topic, 0, "k", j.getBytes(UTF_8)))
-    val q = CdcStream.startDebezium(
+    val q = CdcStream.startWal(
       spark.readStream.format("graft-replaylog").option("topic", topic).load()
         .select(col("offset").as("seq"), col("value").cast("string").as("dbz")),
-      "dbz", "seq", Seq(Subscription("sD", "public", "t", Nil)), bus,
-      pkByTable = Map(("public", "t") -> Seq("id")),
+      new Debezium.Format("dbz", "seq", pkByTable = Map(("public", "t") -> Seq("id"))),
+      Seq(Subscription("sD", "public", "t", Nil)), bus,
       triggerMs = 10L, checkpointLocation = Some(ckpt))
     try { q.processAllAvailable() } finally q.stop()
     val frames = bus.deliveries.filter(_.subscriptionId == "sD").map(_.frame)

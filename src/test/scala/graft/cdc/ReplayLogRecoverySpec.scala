@@ -51,7 +51,7 @@ class ReplayLogRecoverySpec extends SparkSpec {
     ids.foreach(i => ReplayLog.append(topic, partition, i.toString,
       w2j(i, i * 10.0).getBytes(UTF_8)))
 
-  /** The adapter stream in the shape `startWal2Json` consumes: the
+  /** The adapter stream in the shape `Wal2Json.Format` consumes: the
     * per-partition offset is the order column, the record value the
     * wal2json row. */
   private def stream(topic: String): DataFrame =
@@ -66,8 +66,9 @@ class ReplayLogRecoverySpec extends SparkSpec {
     val topic = "rl-clean-" + System.nanoTime(); val ckpt = tmp("rl-ckpt")
     val bus = CdcStream.MemoryBus()
     appendRows(topic, 1 to 3)
-    def attach() = CdcStream.startWal2Json(stream(topic), "wal_json", "seq",
-      subs, bus, triggerMs = 10L, checkpointLocation = Some(ckpt))
+    def attach() = CdcStream.startWal(stream(topic),
+      new Wal2Json.Format("wal_json", "seq"), subs, bus, triggerMs = 10L,
+      checkpointLocation = Some(ckpt))
     val q1 = attach()
     try { q1.processAllAvailable() } finally q1.stop()
     assert(frameIds(bus).sorted == Seq(1L, 2L, 3L))
@@ -86,13 +87,11 @@ class ReplayLogRecoverySpec extends SparkSpec {
     val bus = CdcStream.MemoryBus()
     val runId = "rl-crash-" + System.nanoTime()
     def attach() = {
-      val registry = scala.collection.mutable
-        .Map[(String, String), (org.apache.spark.sql.types.StructType, Seq[String])]()
+      val format = new Wal2Json.Format("wal_json", "seq")
       stream(topic).writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          val s = CdcStream.processWal2JsonBatch(batch, "wal_json", "seq",
-            subs, bus, registry, id)
+          val s = CdcStream.processWalBatch(batch, format, subs, bus, id)
           // die AFTER delivery, BEFORE the epoch commits — the replay
           // window the broker's retained log exists to cover
           if (s.nDeliveries > 0 && crashOnce.putIfAbsent(runId, true) == null)
@@ -129,8 +128,8 @@ class ReplayLogRecoverySpec extends SparkSpec {
     val capped = spark.readStream.format("graft-replaylog")
       .option("topic", topic).option("maxOffsetsPerTrigger", "2").load()
       .select(col("offset").as("seq"), col("value").cast("string").as("wal_json"))
-    val q = CdcStream.startWal2Json(capped, "wal_json", "seq", subs, bus,
-      triggerMs = 10L, checkpointLocation = Some(ckpt))
+    val q = CdcStream.startWal(capped, new Wal2Json.Format("wal_json", "seq"),
+      subs, bus, triggerMs = 10L, checkpointLocation = Some(ckpt))
     try { q.processAllAvailable() } finally q.stop()
     // every record delivered once, in offset order within the partition
     val ids = frameIds(bus)
@@ -192,7 +191,7 @@ class ReplayLogRecoverySpec extends SparkSpec {
     def attach() = CdcStream.startWal(
       spark.readStream.format("graft-replaylog").option("topic", topic).load()
         .select(col("offset").as("seq"), col("value").as("msg")),
-      "msg", "seq", subs, bus, triggerMs = 10L,
+      new PgOutput.Format("msg", "seq"), subs, bus, triggerMs = 10L,
       checkpointLocation = Some(ckpt))
     appendInserts(1 to 2, withRelation = true)
     val q1 = attach()
