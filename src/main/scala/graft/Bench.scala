@@ -32,7 +32,8 @@ object Bench {
     * baseline comparison. Numbers from r13 on are therefore
     * full-result semantics; cross-round comparisons against r12-and-
     * earlier artifacts must expect upward steps on the affected
-    * queries (the COVERAGE round-12 section carries the A/B table). */
+    * queries (the A/B table is in the round-12 section of
+    * `git show 1023dbf:COVERAGE.md`). */
   private def force(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 

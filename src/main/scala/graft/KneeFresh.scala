@@ -58,7 +58,8 @@ object KneeFresh {
   val ControlSeconds = 4
   /** Committed quiet-host busy throughput of the control on THIS
     * harness (32 cpus, fresh-JVM on an idle host — seven calibration
-    * passes read 1.59–1.84M rows/s, see COVERAGE round 12). The band is
+    * passes read 1.59–1.84M rows/s, see the round-12 section of
+    * `git show 1023dbf:COVERAGE.md`). The band is
     * the lower edge of the quiet readings, so healthy hosts sit at
     * health ≥ 1.0 and the 0.7 suspect line is ~2 window-noise widths
     * below quiet. */

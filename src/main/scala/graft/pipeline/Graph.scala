@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over edge lists the pipeline already produces (kNN
@@ -47,7 +48,9 @@ object Graph {
     * id; co-partitioned after the first exchange) and one partial-agg
     * groupBy on dst. Edges+outdeg are computed once and persisted;
     * ranks stay distributed (nothing is collected); every iteration but
-    * the last is checkpointed to cut lineage. */
+    * the last is checkpointed to cut lineage. Both paths return the
+    * ranks persisted and materialized, with every other cache the call
+    * made released. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampMicros: Long = 850000L,
       smallGraphEdgeCap: Long = 2000000L): DataFrame = {
@@ -150,6 +153,7 @@ object Graph {
       .repartition(col("_src"))
       .persist()
     var r = nodes.select(col("id"), lit(1000000L).as("rank_micros"))
+    val checkpoints = Seq.newBuilder[DataFrame]
     for (i <- 1 to iters) {
       val contrib = e.join(r, col("_src") === col("id"))
         .select(col("_dst"),
@@ -169,11 +173,23 @@ object Graph {
       // sf0.1/32: 2.35 vs 2.38 s min, indistinguishable. localCheckpoint
       // keeps the rank table DISTRIBUTED (a collect would cap the node
       // set at one JVM's memory — wrong for a 100M-word vocabulary);
-      // the reset is skipped on the last pass so the returned frame
-      // still ends in the final join (composable lineage).
-      if (i < iters) r = r.localCheckpoint()
+      // the reset is skipped on the last pass: the final join is
+      // materialized below instead.
+      if (i < iters) { r = r.localCheckpoint(); checkpoints += r }
     }
-    r
+    // materialize under the kernel path's eager contract, then release
+    // everything this call cached: the edge and node caches and the
+    // local checkpoints (persisted RDDs; the ranks no longer read them)
+    val ranks = r.persist()
+    ranks.count()
+    checkpoints.result().foreach(_.queryExecution.logical.foreach {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ => ()
+    })
+    e.unpersist()
+    nodes.unpersist()
+    ep.unpersist()
+    ranks
   }
 
   /** The single-task rank kernel behind the small-graph fast path: the

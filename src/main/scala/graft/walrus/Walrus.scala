@@ -90,8 +90,11 @@ object Walrus {
     // arm: the truncate id set is a compile-time constant, and the hot
     // (non-truncate) path saves G per-row type checks and ~30% of the
     // generated method's bytecode (large methods fall off the JIT).
+    // binary UTF8 order, as the battery sorts (String's own order is
+    // UTF-16's, which differs past U+FFFF); Payload relies on it
     val starIds = groups.collect { case (("*", _), ss) => ss }
-      .flatten.map(_.subscriptionId).sorted
+      .flatten.map(_.subscriptionId)
+      .sortBy(org.apache.spark.unsafe.types.UTF8String.fromString)
     val bat = battery(armed,
       typeCol = if (hasType) Some(col(TypeCol)) else None, useCodegen)
     // NOT EvalOnce-fenced — attempted r12, reverted on a CodegenAudit

@@ -131,6 +131,21 @@ class RouterSpec extends SparkSpec {
     }
   }
 
+  test("structural lock: the bound groups split ids by constant membership, no per-row id set") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, CreateArray, InSet,
+      Literal, SortArray}
+    val gs = Router.kernel(spark, schema, subs, dataSchema, "events", Seq("event_id"),
+      Some("tenant")).groupsExpr.get
+    assert(gs.find(_.isInstanceOf[ArrayIntersect]).isEmpty)
+    assert(gs.find(_.isInstanceOf[SortArray]).isEmpty)
+    assert(gs.find {
+      case a: CreateArray => a.children.forall(_.isInstanceOf[Literal])
+      case _ => false
+    }.isEmpty, "no per-row array of literals")
+    // one constant id set per payload group (the registry has four)
+    assert(gs.collect { case s: InSet => s }.size == 4)
+  }
+
   test("kernel memo: equal registry reuses, a changed registry or SQL conf rebuilds, bound 8") {
     def kernel(registry: Seq[Subscription]) = Router.kernel(spark, schema, registry,
       dataSchema, "events", Seq("event_id"), Some("tenant"))

@@ -64,4 +64,21 @@ class GraphSpec extends SparkSpec {
       smallGraphEdgeCap = 0L).as[(Long, Long)].collect().toMap
     assert(iterative == kernel)
   }
+
+  test("pageRank: the iterative path releases its caches, keeping only the ranks") {
+    val edges = (1L to 60L)
+      .map(i => (i % 12, (i * 7 + 3) % 12)).filter(e => e._1 != e._2)
+      .toDF("s", "t")
+    val kernel = Graph.pageRank(edges, "s", "t", iters = 4)
+    val want = kernel.as[(Long, Long)].collect().toMap
+    kernel.unpersist(blocking = true)
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    val ranks = Graph.pageRank(edges, "s", "t", iters = 4, smallGraphEdgeCap = 0L)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(baseline.subsetOf(after) && (after -- baseline).size == 1,
+      "the returned frame is the only cache left behind")
+    assert(ranks.as[(Long, Long)].collect().toMap == want)
+    ranks.unpersist(blocking = true)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == baseline)
+  }
 }

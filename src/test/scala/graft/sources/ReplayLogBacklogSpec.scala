@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * BOUNDEDLY — every micro-batch within the cap (no "drain everything in
   * one giant batch" memory spike), no partition starved behind a skewed
   * neighbor (the 1-row floor), live rows flowing once the backlog drains.
-  * The catch-up curve (backlog size vs batches vs wall time) is recorded
-  * for COVERAGE. */
+  * The catch-up curve (backlog size vs batches vs wall time) is printed
+  * as test info; the curves recorded through round 16 are in the round
+  * sections of `git show 1023dbf:COVERAGE.md`. */
 class ReplayLogBacklogSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
@@ -219,7 +220,7 @@ class ReplayLogBacklogSpec extends SparkSpec {
     assert(convergedAtMs < producerEndRel,
       s"only converged after the producer stopped: $convergedAtMs ms " +
         s"(producer ended at $producerEndRel ms)")
-    // the curve for COVERAGE: time-to-freshness and the shape
+    // the curve, printed as test info: time-to-freshness and the shape
     info(s"backlog=$backlog live=${produced} cap=$cap batches=${pts.size} " +
       s"convergedAtMs=$convergedAtMs " +
       s"ageCurve=${pts.grouped(math.max(1, pts.size / 12)).map(_.head._3).mkString(",")}")

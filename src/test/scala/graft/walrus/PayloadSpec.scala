@@ -3,13 +3,15 @@ package graft.walrus
 import graft.SparkSpec
 import graft.filters.FilterParser
 import graft.model.Subscription
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Payload shaping: per-group projection, TOAST fallback, and the in-band
   * error-row matrix (400 no-pk, 401 unauthorized, 413 oversize). */
 class PayloadSpec extends SparkSpec {
   import spark.implicits._
-  import PayloadSpec.Chg
+  import PayloadSpec.{Chg, IdsRow}
 
   lazy val matched = {
     val changes = Seq(
@@ -26,6 +28,113 @@ class PayloadSpec extends SparkSpec {
   private def shaped(pk: Seq[String], maxBytes: Int = 1 << 20,
       denied: Set[String] = Set.empty) =
     Payload.shape(matched, subs, Seq("id", "details"), pk, maxBytes, denied)
+
+  /** The group split `groups` and `shapeGeneric` replaced, kept as the
+    * reference: per payload group (in `byPayloadGroup` order),
+    * `sort_array(array_intersect(subscription_ids, <group's ids>))`, and
+    * the group only when that is non-empty. */
+  private def referenceSplit(registry: Seq[Subscription]): Column =
+    filter(array(registry.groupBy(s => (s.claimsRole, s.selectedColumns.sorted)).toSeq
+      .sortBy { case ((role, sel), _) => (Option(role), sel.mkString(",")) }
+      .map { case ((role, sel), ss) =>
+        val ids = sort_array(array_intersect(col("subscription_ids"),
+          array(ss.map(_.subscriptionId).sorted.map(lit): _*)))
+        when(size(ids) > 0, struct(lit(role).as("claims_role"),
+          lit(sel.mkString(",")).as("selected_columns"), ids.as("subscription_ids")))
+      }: _*), _.isNotNull)
+
+  private def binarySorted(ids: Seq[String]): Seq[String] =
+    ids.sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+
+  /** A seeded registry of `nGroups` (role, selected columns) payload
+    * groups: group 0 holds one id, the others 1–12 ids drawn from `pool`
+    * (a drawn id can sit in two groups); "ghost" is in none. */
+  private def registry(r: scala.util.Random, nGroups: Int, pool: IndexedSeq[String])
+      : Seq[Subscription] = {
+    val keys = for (role <- Seq("anon", "authenticated", "service");
+      sel <- Seq(Nil, Seq("v"), Seq("id"), Seq("v", "id"))) yield (role, sel)
+    r.shuffle(keys).take(nGroups).zipWithIndex.flatMap { case ((role, sel), g) =>
+      val ids = if (g == 0) Seq(pool(r.nextInt(pool.size)))
+        else Seq.fill(1 + r.nextInt(12))(pool(r.nextInt(pool.size))).distinct
+      ids.map(id => Subscription(id, "public", "t", Nil, claimsRole = role,
+        selectedColumns = sel))
+    }
+  }
+
+  /** Seeded change rows whose `subscription_ids` are what the battery
+    * emits: binary-UTF8 sorted, possibly with an id twice (adjacent),
+    * possibly empty; plus one null. */
+  private def idsRows(r: scala.util.Random, pool: IndexedSeq[String]): Seq[IdsRow] = {
+    val all = pool :+ "ghost"
+    (0 until 40).map { k =>
+      val picked = Seq.fill(r.nextInt(8))(all(r.nextInt(all.size)))
+      val dup = if (picked.nonEmpty && r.nextInt(3) == 0) Seq(picked.head) else Nil
+      val ids = if (k == 39) null else binarySorted(picked ++ dup)
+      IdsRow(k, Seq("INSERT", "UPDATE", "DELETE")(r.nextInt(3)),
+        f"2024-01-01T00:00:$k%02d.000Z", k.toLong, s"v$k", ids)
+    }
+  }
+
+  test("differential: groups and shapeGeneric split ids exactly as sort_array(array_intersect)") {
+    // non-ASCII ids pin binary UTF8 order: U+FF21 sorts before U+1F600
+    // there, after it in UTF-16 (String.compareTo) order
+    val pool = (0 until 30).map(i => f"s$i%02d") ++ Seq("\uFF21", "\uD83D\uDE00", "é")
+    var seen = Map("duplicate" -> 0, "empty" -> 0, "ghost" -> 0, "one-id group" -> 0)
+    for (nGroups <- Seq(1, 2, 12); seed <- 1 to 4) {
+      val r = new scala.util.Random(nGroups * 100 + seed)
+      val subs = registry(r, nGroups, pool)
+      val rows = idsRows(r, pool)
+      val df = rows.toDF()
+      val got = df.select(col("key"), transform(
+        Payload.groups(df.schema, subs, Seq("id", "v"), Seq("id")).get,
+        g => struct(g("claims_role").as("claims_role"),
+          g("selected_columns").as("selected_columns"),
+          g("subscription_ids").as("subscription_ids"))).as("g"))
+      val want = df.select(col("key"), referenceSplit(subs).as("g"))
+      def byKey(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(x => x.getInt(0) -> x.getSeq[org.apache.spark.sql.Row](1)).toMap
+      val wantByKey = byKey(want)
+      assert(byKey(got) == wantByKey, s"groups, nGroups=$nGroups seed=$seed")
+      assert(wantByKey(39).isEmpty, "null subscription_ids yields no group")
+
+      val matched = df.select(lit("public").as("change_schema"), lit("t").as("change_table"),
+        col("change_type"), col("commit_timestamp"),
+        map(lit("id"), col("id").cast("string"), lit("v"), col("v")).as("record"),
+        col("subscription_ids"))
+      def tuples(d: org.apache.spark.sql.DataFrame) = d.collect().map(x =>
+        (x.getString(0), x.getString(1), x.getString(2), x.getSeq[String](3))).sortBy(_.toString).toSeq
+      val gotGeneric = Payload.shapeGeneric(matched, subs, Map(("public", "t") -> Seq("id")))
+        .select("commit_timestamp", "claims_role", "selected_columns", "subscription_ids")
+      val wantGeneric = matched.select(col("commit_timestamp"), inline(referenceSplit(subs)))
+      assert(tuples(gotGeneric) == tuples(wantGeneric), s"shapeGeneric, nGroups=$nGroups seed=$seed")
+
+      val members = subs.map(_.subscriptionId).toSet
+      val oneId = subs.groupBy(s => (s.claimsRole, s.selectedColumns)).values
+        .filter(_.size == 1).flatMap(_.map(_.subscriptionId)).toSet
+      rows.filter(_.subscription_ids != null).foreach { row =>
+        val ids = row.subscription_ids
+        if (ids.isEmpty) seen += "empty" -> (seen("empty") + 1)
+        if (ids.distinct.size < ids.size && ids.diff(ids.distinct).exists(members))
+          seen += "duplicate" -> (seen("duplicate") + 1)
+        if (ids.contains("ghost")) seen += "ghost" -> (seen("ghost") + 1)
+        if (ids.exists(oneId)) seen += "one-id group" -> (seen("one-id group") + 1)
+      }
+    }
+    // the seeded rows exercise every case the split must get right
+    assert(seen.values.forall(_ > 0), seen)
+  }
+
+  test("TRUNCATE routing keeps a group's ids in binary UTF8 order") {
+    // U+FF21 sorts before U+1F600 in UTF8 bytes, after it in UTF-16
+    val truncSubs = Seq("\uD83D\uDE00", "\uFF21").map(id => Subscription(id, "public", "t", Nil))
+    val changes = Seq(Chg(1, "TRUNCATE", null, "2024-01-01T00:00:00.000Z")).toDF()
+      .withColumnRenamed("payload", "details")
+    val m = Walrus.matchSubscriptions(changes, truncSubs,
+      changes.drop("change_type", "commit_timestamp").schema, "t")
+    val got = Payload.shape(m, truncSubs, Seq("id", "details"), Seq("id"))
+      .select("subscription_ids").as[Seq[String]].collect().toSeq
+    assert(got == Seq(Seq("\uFF21", "\uD83D\uDE00")))
+  }
 
   test("401: denied role gets error row, record suppressed, ids kept") {
     val rows = shaped(pk = Seq("id"), denied = Set("anon"))
@@ -94,4 +203,6 @@ class PayloadSpec extends SparkSpec {
 object PayloadSpec {
   case class Chg(id: Int, change_type: String, payload: String,
       commit_timestamp: String)
+  case class IdsRow(key: Int, change_type: String, commit_timestamp: String,
+      id: Long, v: String, subscription_ids: Seq[String])
 }
