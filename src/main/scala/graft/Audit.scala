@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{AesDecrypt, AesEncrypt,
   ArrayFilter, ArraySort, ArrayTransform, Expression, JsonToStructs, Md5,
@@ -17,6 +18,7 @@ import org.apache.spark.sql.execution.exchange._
 import org.apache.spark.sql.execution.joins._
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graft.ListenerBridge
 
 /** Plan governance over the whole query registry. [[walk]] builds every
   * registered query once at sf0.001 (local[4], 4 shuffle partitions,
@@ -24,7 +26,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * and applies a check to each executed plan. A plan that fails to
   * build is a failure, never skipped.
   *
-  * Three checks are gates, enforced in tier-1 by `PlanGovernanceSpec`:
+  * Four checks are gates, enforced in tier-1 by `PlanGovernanceSpec`:
   *  - [[fingerprint]]: per-query counts of the expensive operators
   *    (exchanges, join strategies, windows, global sorts) equal the
   *    committed `PLAN_FINGERPRINTS.json`. A refactor that silently turns
@@ -40,6 +42,10 @@ import org.apache.spark.sql.functions.{count, lit}
   *  - [[codegenViolations]]: every whole-stage-codegen subtree compiles
   *    (a Janino failure, e.g. a method past 64 KB, silently reruns the
   *    stage interpreted) and no generated method exceeds [[JitLimit]].
+  *  - [[eagerBuild]]: a warm build (every table's schema already
+  *    memoised) submits no Spark job outside [[EagerBuilds]]. The
+  *    registry builds a query per execution, so a job at build time is
+  *    paid on every request.
   *
   * The rest run by hand (`runMain graft.Audit <command>`):
   *  - `fingerprint-write [sfDir] [file]`: regenerate the baseline;
@@ -85,31 +91,107 @@ object Audit {
     * Entire-partition frames (unbounded both ways) never need one. */
   val AssessedShrinkingFrames: Set[String] = Set()
 
+  /** Queries whose warm build runs Spark jobs by design: a driver-side
+    * value the plan is built from (a collect or count), or a materialised
+    * intermediate (persist + count). Each is paid per execution. */
+  val EagerBuilds: Set[String] = Set(
+    "a4_presence_orswot",         // collects the sync point (max seq)
+    "a_gini",                     // Profile.giniConcentration: per-partition offsets
+    "curation_curriculum",        // Curation.curriculumBins: per-partition offsets
+    "dedup_clusters",             // Dedup.connectedComponents: persisted edges + labels
+    "dedup_incremental",          // Incremental.bloomWords: collects the bloom filter
+    "dedup_semantic",             // Similarity IVF: centroid count, centroids, buckets
+    "j8_region_placement",        // Muster.boundedCollect: driver-side placement
+    "j8_two_choice_rebalance",    // Muster.boundedCollect: driver-side placement
+    "j_muster_router",            // Muster.boundedCollect: driver-side placement
+    "mm_audio_neardup",           // Multimodal: doc count + materialised pairs
+    "mm_dedup_media",             // Multimodal.mediaFromDocuments: doc count sizes slices
+    "mm_frame_match",             // Multimodal: doc count + materialised pairs
+    "mm_frame_sample",            // Multimodal.mediaFromDocuments: doc count sizes slices
+    "mm_image_stats",             // Multimodal.mediaFromDocuments: doc count sizes slices
+    "mm_media_clusters",          // Multimodal pairs + Dedup.connectedComponents
+    "mm_media_features",          // Multimodal.mediaFromDocuments: doc count sizes slices
+    "mm_pcm_stats",               // Multimodal.mediaFromDocuments: doc count sizes slices
+    "mm_phash_neardup",           // Multimodal: doc count + materialised pairs
+    "mm_resize",                  // Multimodal.mediaFromDocuments: doc count sizes slices
+    "mm_video_neardup",           // Multimodal: doc count + materialised pairs
+    "pipeline_curation_e2e_v2",   // collects the source mix rates (two-pass)
+    "sim_ann_ivf",                // Similarity IVF: centroid count, centroids, buckets
+    "sim_ann_ivf_trained",        // Similarity IVF: k-means rounds on the driver
+    "sim_ann_pq",                 // Similarity.pqTopK: collects the codebook sample
+    "sim_ann_recall",             // Similarity IVF + the exact baseline's counts
+    "sim_hard_negatives",         // Similarity.knnGraphIvf: centroids, buckets, sizes
+    "sim_knn_graph",              // Similarity.knnGraphIvf: centroids, buckets, sizes
+    "sim_linear_probe",           // Classifier.linearProbe: gradient steps on the driver
+    "sim_pagerank",               // Graph.pageRank: edge count + materialised ranks
+    "src_replay_log",             // collects the events it appends to the replay log
+    "text_bpe_tokenize",          // Bpe.train: collects the word types
+    "text_textrank")              // Graph.pageRank: edge count + materialised ranks
+
   /** Build each registered query's executed plan, in name order, and
-    * apply `check`. A build or check that throws is a Left with its
+    * apply `check` to it and the number of Spark jobs its build
+    * submitted. Every table's schema is memoised first, so that count
+    * is a warm build's. A build or check that throws is a Left with its
     * message. Caches a query persisted are dropped before the next. */
   def walk[A](spark: SparkSession, sfDir: String = SfDir)(
-      check: (String, DataFrame, SparkPlan) => A)
-      : Seq[(String, Either[String, A])] =
+      check: (String, DataFrame, SparkPlan, Int) => A)
+      : Seq[(String, Either[String, A])] = {
+    val dir = new java.io.File(sfDir)
+    require(dir.isDirectory, s"$sfDir is not a directory")
+    dir.list().filter(_.endsWith(".parquet"))
+      .foreach(f => graft.cdc.ChangeFeed.table(spark, sfDir, f.stripSuffix(".parquet")))
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val r =
         try {
-          val df = fn(spark, sfDir)
-          Right(check(name, df, df.queryExecution.executedPlan))
+          val (df, jobs) = jobsDuring(spark)(fn(spark, sfDir))
+          Right(check(name, df, df.queryExecution.executedPlan, jobs))
         } catch { case NonFatal(e) => Left(String.valueOf(e.getMessage).take(200)) }
       spark.catalog.clearCache()
       name -> r
     }
+  }
+
+  private val JobTag = "graft.audit.jobTag"
+
+  /** `body`'s result and the number of Spark jobs it submitted from the
+    * calling thread. */
+  def jobsDuring[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(JobTag) == tag)) jobs.incrementAndGet()
+    }
+    val prev = sc.getLocalProperty(JobTag)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(JobTag, tag)
+    try {
+      val a = body
+      ListenerBridge.drain(sc)
+      (a, jobs.get)
+    } finally {
+      sc.setLocalProperty(JobTag, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   // ------------------------------------------------------------- gates
 
   final case class GateReport(fingerprint: String, shapes: Seq[String],
-      codegen: Seq[String])
+      codegen: Seq[String], eagerBuild: Seq[String])
 
-  /** The three gates' readings for one plan. */
-  def gates(name: String, plan: SparkPlan): GateReport =
+  /** The four gates' readings for one plan and its build's job count. */
+  def gates(name: String, plan: SparkPlan, buildJobs: Int): GateReport =
     GateReport(render(fingerprint(plan)), unboundedShapes(name, plan),
-      codegenViolations(plan))
+      codegenViolations(plan), eagerBuild(name, buildJobs))
+
+  /** A warm build that submitted jobs outside [[EagerBuilds]], or an
+    * [[EagerBuilds]] entry whose build no longer submits any. */
+  def eagerBuild(name: String, buildJobs: Int): Seq[String] =
+    if (buildJobs > 0 && !EagerBuilds(name)) Seq(s"$buildJobs Spark job(s) while building")
+    else if (buildJobs == 0 && EagerBuilds(name)) Seq("in EagerBuilds but builds with no job")
+    else Nil
 
   def fingerprint(plan: SparkPlan): Map[String, Int] =
     plan.collect {
@@ -348,7 +430,7 @@ object Audit {
   /** Walk the registry in the audit session and print every plan that
     * failed to build; returns the successful results and whether any
     * failed. */
-  private def walkAll[A](sfDir: String)(check: (String, DataFrame, SparkPlan) => A)
+  private def walkAll[A](sfDir: String)(check: (String, DataFrame, SparkPlan, Int) => A)
       : (Seq[(String, A)], Boolean) = {
     val spark = Bench.session("4", aqe = false, logLevel = "ERROR")
     val results = try walk(spark, sfDir)(check) finally spark.stop()
@@ -405,21 +487,21 @@ object Audit {
       case Some("codegen") if args.length == 2 => codegenDrill(args(1))
       case Some("fingerprint-write") =>
         val file = args.lift(2).getOrElse("PLAN_FINGERPRINTS.json")
-        val (fps, failed) = walkAll(args.lift(1).getOrElse(SfDir))((_, _, p) =>
+        val (fps, failed) = walkAll(args.lift(1).getOrElse(SfDir))((_, _, p, _) =>
           render(fingerprint(p)))
         if (failed) sys.exit(1)
         writeFingerprints(file, fps.toMap)
         println(s"[fp] wrote ${fps.size} fingerprints to $file")
       case Some(cmd @ ("prune" | "battery" | "amp" | "dupexpr" | "jsonparse")) =>
         val (found, failed) = cmd match {
-          case "prune" => walkAll(args.lift(1).getOrElse(SfDir))((_, df, p) => prune(df, p))
+          case "prune" => walkAll(args.lift(1).getOrElse(SfDir))((_, df, p, _) => prune(df, p))
           case "battery" =>
             val minWeight = args.lift(1).fold(4)(_.toInt)
-            walkAll(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", SfDir))((_, _, p) =>
+            walkAll(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", SfDir))((_, _, p, _) =>
               battery(minWeight)(p))
-          case "amp" => walkAll(SfDir)((_, _, p) => amp(p))
-          case "dupexpr" => walkAll(SfDir)((_, _, p) => dupexpr(p))
-          case _ => walkAll(SfDir)((_, _, p) => jsonparse(p))
+          case "amp" => walkAll(SfDir)((_, _, p, _) => amp(p))
+          case "dupexpr" => walkAll(SfDir)((_, _, p, _) => dupexpr(p))
+          case _ => walkAll(SfDir)((_, _, p, _) => jsonparse(p))
         }
         found.foreach { case (n, hit) => hit.foreach(h => println(s"@@@ $n: $h")) }
         if (failed) sys.exit(1)

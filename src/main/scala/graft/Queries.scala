@@ -127,8 +127,9 @@ object Queries {
   /** J1: change ⨝ subscriptions via the compiled predicate battery; exploded
     * to one row per (change, matching subscription). */
   def walrusMatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val changes = ChangeFeed.fromTable(ev(spark, sfDir), "event_id", "ts", "events")
-    val dataSchema = ev(spark, sfDir).schema
+    val events = ev(spark, sfDir)
+    val changes = ChangeFeed.fromTable(events, "event_id", "ts", "events")
+    val dataSchema = events.schema
     // explode_outer + post-filter on the GENERATED column: plain explode
     // makes InferFiltersFromGenerate add a pre-Generate filter that
     // re-evaluates the whole predicate battery (size(...)>0); the outer
@@ -162,10 +163,11 @@ object Queries {
   /** J1 via the degenerate-case generic evaluator — must equal the compiled
     * path bit-for-bit (same oracle). */
   def walrusGeneric(spark: SparkSession, sfDir: String): DataFrame = {
+    val events = ev(spark, sfDir)
     val changes = ChangeFeed.fromTable(
-      spread(ev(spark, sfDir), "event_id"), "event_id", "ts", "events")
+      spread(events, "event_id"), "event_id", "ts", "events")
     graft.walrus.GenericMatch.matchExploded(
-      changes, flagshipSubs, ev(spark, sfDir).schema, "events", "event_id")
+      changes, flagshipSubs, events.schema, "events", "event_id")
   }
 
   /** 200 generated subscriptions across ops/actions — the N-subs × M-changes
@@ -199,9 +201,10 @@ object Queries {
   }
 
   def walrusMatch200(spark: SparkSession, sfDir: String): DataFrame = {
+    val events = ev(spark, sfDir)
     val changes = ChangeFeed.fromTable(
-      spread(ev(spark, sfDir), "event_id"), "event_id", "ts", "events")
-    Walrus.matchSubscriptions(changes, manySubs.map(_._1), ev(spark, sfDir).schema, "events")
+      spread(events, "event_id"), "event_id", "ts", "events")
+    Walrus.matchSubscriptions(changes, manySubs.map(_._1), events.schema, "events")
       .select(col("event_id"),
         explode_outer(col("subscription_ids")).as("subscription_id"))
       .where(col("subscription_id").isNotNull)
@@ -214,10 +217,11 @@ object Queries {
   /** TRUNCATE routing: truncate rows (no row data) reach `*`-action
     * subscribers only, with filters bypassed. */
   def walrusTruncate(spark: SparkSession, sfDir: String): DataFrame = {
-    val changes = ChangeFeed.fromTable(ev(spark, sfDir), "event_id", "ts", "events")
+    val events = ev(spark, sfDir)
+    val changes = ChangeFeed.fromTable(events, "event_id", "ts", "events")
       .withColumn(Walrus.TypeCol,
         when(col("event_id") % 17 === 0, "TRUNCATE").otherwise(col(Walrus.TypeCol)))
-    Walrus.matchSubscriptions(changes, flagshipSubs, ev(spark, sfDir).schema, "events")
+    Walrus.matchSubscriptions(changes, flagshipSubs, events.schema, "events")
       .select(col("event_id"), col(Walrus.TypeCol),
         explode_outer(col("subscription_ids")).as("subscription_id"))
       .where(col("subscription_id").isNotNull)
@@ -263,7 +267,8 @@ object Queries {
         val tpe = when(m < 6, "INSERT").when(m < 9, "UPDATE")
           .otherwise("DELETE")
         val isDel = tpe === "DELETE"
-        val changes = ev(s, d).select(
+        val events = ev(s, d)
+        val changes = events.select(
           col("event_id"),
           tpe.as(Walrus.TypeCol),
           when(!isDel, col("value")).as("value"),
@@ -273,7 +278,7 @@ object Queries {
           when(isDel, upper(col("event_type"))).as("old_event_type"),
           when(isDel, col("user_id") + 1).as("old_user_id"))
         val schema = org.apache.spark.sql.types.StructType(
-          ev(s, d).schema.fields.filter(f =>
+          events.schema.fields.filter(f =>
             Seq("value", "event_type", "user_id").contains(f.name)))
         val src = Walrus.deleteFilterSource(changes,
           Seq("value", "event_type", "user_id"))
@@ -1578,8 +1583,9 @@ object Queries {
   private val payloadQueries: Seq[Q] = Seq(
     Q("p6_column_projection",
       (s, d) => {
-        val changes = ChangeFeed.fromTable(ev(s, d), "event_id", "ts", "events")
-        val matched = Walrus.matchedOnly(changes, payloadSubs, ev(s, d).schema, "events")
+        val events = ev(s, d)
+        val changes = ChangeFeed.fromTable(events, "event_id", "ts", "events")
+        val matched = Walrus.matchedOnly(changes, payloadSubs, events.schema, "events")
         Payload.shape(matched, payloadSubs,
             dataCols = Seq("event_id", "event_type", "user_id", "value"),
             pk = Seq("event_id"))
@@ -1660,9 +1666,10 @@ object Queries {
     // still receive rows, with record suppressed and a 401 error attached.
     Q("p_error_rows_401",
       (s, d) => {
+        val events = ev(s, d)
         val changes = ChangeFeed.fromTable(
-          spread(ev(s, d), "event_id"), "event_id", "ts", "events")
-        val matched = Walrus.matchedOnly(changes, payloadSubs, ev(s, d).schema, "events")
+          spread(events, "event_id"), "event_id", "ts", "events")
+        val matched = Walrus.matchedOnly(changes, payloadSubs, events.schema, "events")
         Payload.shape(matched, payloadSubs,
             dataCols = Seq("event_id", "event_type", "user_id", "value"),
             pk = Seq("event_id"), unauthorizedRoles = Set("anon"))
@@ -1693,8 +1700,9 @@ object Queries {
     // 20260626120000:449-457).
     Q("p_error_rows_400",
       (s, d) => {
-        val changes = ChangeFeed.fromTable(ev(s, d), "event_id", "ts", "events")
-        val matched = Walrus.matchedOnly(changes, payloadSubs, ev(s, d).schema, "events")
+        val events = ev(s, d)
+        val changes = ChangeFeed.fromTable(events, "event_id", "ts", "events")
+        val matched = Walrus.matchedOnly(changes, payloadSubs, events.schema, "events")
         Payload.shape(matched, payloadSubs,
             dataCols = Seq("event_id", "event_type", "user_id", "value"),
             pk = Seq.empty)
@@ -2250,7 +2258,8 @@ object Queries {
     Q("j6_list_changes_shape",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val changes = ChangeFeed.fromTable(ev(s, d), "event_id", "ts", "events")
+        val events = ev(s, d)
+        val changes = ChangeFeed.fromTable(events, "event_id", "ts", "events")
         val subs = Seq(
           graft.model.Subscription("s1", "public", "events",
             graft.filters.FilterParser
@@ -2265,7 +2274,7 @@ object Queries {
         // caught the Janino redefinition; Spark would have silently run
         // the stage interpreted)
         val m = Walrus.matchSubscriptions(changes, subs,
-            ev(s, d).schema, "events")
+            events.schema, "events")
           .withColumn("sub_ids_str", array_join(col("subscription_ids"), ","))
           .withColumn("pub", col("event_type"))
           .withColumn("vis", col("sub_ids_str") =!= "")

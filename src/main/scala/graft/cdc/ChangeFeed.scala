@@ -1,7 +1,10 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Turns a table (batch or stream) into a CDC change feed with the metadata
   * the WALRUS pipeline expects — the Spark analog of the reference's WAL poll
@@ -33,27 +36,75 @@ object ChangeFeed {
         date_format(col(tsCol), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
   }
 
-  /** Read one of the driver parquet tables.
+  /** Read one of the input parquet tables, `<sfDir>/<name>.parquet`.
     *
-    * The synthetic `events` table stores TIMESTAMP(NANOS) which Spark 4 won't
-    * read natively; read nanos as long and truncate to microsecond timestamps
-    * (integer division — doubles can't hold epoch-nanos exactly). DuckDB's
-    * µs-native TIMESTAMP truncates identically, so oracles agree. */
+    * The schema is inferred once and then read from a memo, so a warm
+    * build submits no Spark job (inference reads the parquet footers in
+    * one). A memo entry is keyed on the path, a listing stamp (each leaf
+    * file's name, size and mtime) and the session's parquet read confs
+    * (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+    * `spark.sql.files.*`, `spark.sql.caseSensitive`). Rewriting the table
+    * changes its stamp, so the next read infers again; the stale entry is
+    * never matched and ages out. The memo keeps [[MemoBound]] entries,
+    * least recently used evicted.
+    *
+    * Side effect: sets `spark.sql.legacy.parquet.nanosAsLong=true` on the
+    * session, for every later read. The synthetic `events` table may store
+    * TIMESTAMP(NANOS), which Spark 4 won't read natively; its `ts` is read
+    * as long nanos and truncated to microsecond timestamps (integer
+    * division: doubles can't hold epoch-nanos exactly). DuckDB's µs-native
+    * TIMESTAMP truncates identically, so oracles agree. Naive µs timestamps
+    * (TIMESTAMP_NTZ) become session-UTC instants: every main/spec session
+    * pins `spark.sql.session.timeZone=UTC`, so the cast is value-preserving
+    * and DuckDB's naive read sees the same epoch, while LTZ-only functions
+    * (`unix_micros` & co) keep working. Both rewrites are one projection. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    df.schema.fields.foldLeft(df) {
-      case (acc, f) if f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType =>
-        acc.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // naive µs timestamps (TIMESTAMP_NTZ) → session-UTC instants: every
-      // main/spec session pins spark.sql.session.timeZone=UTC, so the cast
-      // is value-preserving and DuckDB's naive read sees the same epoch —
-      // while LTZ-only functions (unix_micros & co) keep working when the
-      // driver emits µs instead of nanos
-      case (acc, f) if f.dataType == org.apache.spark.sql.types.TimestampNTZType =>
-        acc.withColumn(f.name,
-          col(f.name).cast(org.apache.spark.sql.types.TimestampType))
-      case (acc, _) => acc
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
+    def rewrite(f: StructField): Option[Column] = f.dataType match {
+      case LongType if f.name == "ts" => Some(timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => Some(col(f.name).cast(TimestampType))
+      case _ => None
     }
+    if (!df.schema.exists(rewrite(_).isDefined)) df
+    else df.select(df.schema.map(f => rewrite(f).fold(col(f.name))(_.as(f.name))): _*)
+  }
+
+  /** Entries kept in the schema memo (least recently used evicted). */
+  val MemoBound = 32
+
+  private val ReadConfs = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.",
+    "spark.sql.files.", "spark.sql.caseSensitive")
+
+  private final case class Key(path: String, stamp: Seq[(String, Long, Long)],
+      confs: Map[String, String])
+
+  private val memo = new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean =
+      size() > MemoBound
+  }
+
+  /** Entries in the schema memo (spec surface). */
+  private[cdc] def memoSize: Int = memo.synchronized(memo.size())
+
+  /** The schema `spark.read.parquet(path)` infers under the session's
+    * current read confs, inferred on first use and then reused. */
+  private[cdc] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val key = Key(path, stamp(spark, path),
+      spark.conf.getAll.filter { case (k, _) => ReadConfs.exists(k.startsWith) })
+    memo.synchronized(Option(memo.get(key))).getOrElse {
+      val s = spark.read.parquet(path).schema
+      memo.synchronized(memo.put(key, s))
+      s
+    }
+  }
+
+  /** (name, size, mtime) of every leaf file under `path`, by name. */
+  private def stamp(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
   }
 }

@@ -3,11 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Plan governance in tier-1: ONE registry walk ([[Audit.walk]] at
-  * sf0.001, AQE off, 4 shuffle partitions) asserting the three gates —
+  * sf0.001, AQE off, 4 shuffle partitions) asserting the four gates —
   * every fingerprint equals the committed PLAN_FINGERPRINTS.json, no
   * unbounded global window/sort or shrinking frame outside the
-  * whitelists, and every codegen subtree compiles and fits the JIT
-  * method ceiling. A plan that fails to build fails the spec. */
+  * whitelists, every codegen subtree compiles and fits the JIT
+  * method ceiling, and no warm build submits a Spark job outside
+  * `Audit.EagerBuilds`. A plan that fails to build fails the spec. */
 class PlanGovernanceSpec extends SparkSpec {
 
   private val Pinned = Seq("spark.sql.adaptive.enabled" -> "false",
@@ -20,7 +21,7 @@ class PlanGovernanceSpec extends SparkSpec {
     assert(Files.isDirectory(Paths.get(Audit.SfDir)), s"${Audit.SfDir} is missing")
     val prev = settings
     Pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try (prev, Audit.walk(spark)((name, _, plan) => Audit.gates(name, plan)))
+    try (prev, Audit.walk(spark)((name, _, plan, jobs) => Audit.gates(name, plan, jobs)))
     finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
@@ -51,6 +52,11 @@ class PlanGovernanceSpec extends SparkSpec {
 
   test("every codegen subtree compiles and fits the JIT method ceiling") {
     val bad = offenders(_.codegen)
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("no warm build submits a Spark job outside Audit.EagerBuilds") {
+    val bad = offenders(_.eagerBuild)
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
