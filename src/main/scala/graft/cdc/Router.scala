@@ -2,6 +2,7 @@ package graft.cdc
 
 import graft.model.Subscription
 import graft.walrus.{Payload, Walrus}
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -26,10 +27,22 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
   * (SOSP 2017) names for low-latency micro-batch streaming.
   *
   * Per change on the 200-subscription `cdc` registry (37 deliveries per
-  * change, one core of a 4-cpu host), a route costs 33–45 µs: the
-  * battery ~11 µs, the payload groups 23–31 µs (each group's ids
-  * selected by constant membership, see [[Payload.groups]]), the frames
-  * and sink offers the rest.
+  * change, one core of a 4-cpu host), a route costs 15–18 µs, against
+  * 35 µs with the `filter`/`transform` id split and the record JSON built
+  * per read: the payload groups 5–7 µs of it (18–19 µs before, see
+  * [[Payload.groups]]), the battery, frames and sink offers the rest.
+  *
+  * A kernel ships once per task slot, not once per task. The driver
+  * serializes its bound expressions once, when it builds the kernel; a
+  * task carries those bytes and the kernel's id, and borrows a [[Runner]]
+  * (one deserialized copy) from a per-JVM pool keyed by that id,
+  * deserializing only on a miss. The pool keeps at most one idle runner
+  * per task slot of the JVM, across all kernels, and drops the least
+  * recently returned first; a kernel evicted from the memo takes its idle
+  * runners with it. When each task deserialized its own copy, a gated
+  * micro-batch paid that for each of its tasks, whatever its size; with
+  * the pool and the one-pass groups together, a traced `cdc` run's
+  * executor CPU per 1,000 changes fell from 43 to 19 ms.
   *
   * Bound kernels live in a value-keyed memo of [[MemoBound]] entries: the
   * registry, the batch and data schemas, table, pk, tenant column and the
@@ -54,78 +67,149 @@ object Router {
       lit(",\"errors\":"), coalesce(to_json(errors), lit("null")),
       lit("}"))
 
-  /** Bound routing for one (registry, batch schema). Serializable: each
-    * task gets its own deserialized copy, so expression state is never
-    * shared between threads; per-row scratch lives in a [[Runner]]. */
-  final class Kernel private[Router] (
-      ids: Expression,
-      payload: Option[(Expression, Expression)], // (groups, frame); None: no subs
-      tenant: Option[Expression],
-      nGroupFields: Int,
-      roleIdx: Int,
-      groupIdsIdx: Int) extends Serializable {
+  /** The bound expressions of one kernel: what a task deserializes. */
+  private final class Program(
+      val ids: Expression,
+      val payload: Option[(Expression, Expression)], // (groups, frame); None: no subs
+      val tenant: Option[Expression],
+      val nGroupFields: Int,
+      val roleIdx: Int,
+      val groupIdsIdx: Int) extends Serializable
 
-    /** Per-partition evaluator (not thread-safe: one per task). */
-    def runner(): Runner = new Runner
+  /** Bound routing for one (registry, batch schema), built on the driver.
+    * Not serializable: tasks get it as [[Shipped]] bytes, serialized once
+    * here, and run it through a pooled [[Runner]]. */
+  final class Kernel private[Router] (program: Program) {
+    private[Router] val shipped: Shipped = Shipped(nextKernelId.incrementAndGet(),
+      Router.serialize(program))
 
     /** The bound payload-groups expression (spec surface). */
-    private[cdc] def groupsExpr: Option[Expression] = payload.map(_._1)
+    private[cdc] def groupsExpr: Option[Expression] = program.payload.map(_._1)
 
-    final class Runner {
-      private val idsRow = new GenericInternalRow(1)
-      private val groupRow = new GenericInternalRow(1)
-      private val withIds = new JoinedRow()
-      private val withGroup = new JoinedRow()
+    /** Pool key of this kernel's runners (spec surface). */
+    private[cdc] def id: Long = shipped.id
+  }
 
-      /** Gate key of `row`: its tenant as a string ("null" for NULL), or
-        * "*" without a tenant column. */
-      def tenantOf(row: InternalRow): String = tenant match {
-        case Some(t) => t.eval(row).toString
-        case None => "*"
-      }
+  /** A kernel as tasks receive it: its pool key and serialized program. */
+  private final case class Shipped(id: Long, bytes: Array[Byte])
 
-      /** Offer `row`'s deliveries to `sink`; returns how many. Rows with
-        * no match, null groups and null-role groups deliver nothing; the
-        * frame is evaluated and decoded once per (change × group). */
-      def route(row: InternalRow, sink: CdcStream.DeliverySink): Long = {
-        val matched = ids.eval(row).asInstanceOf[ArrayData]
-        if (matched.numElements() == 0 || payload.isEmpty) return 0L
-        val (groups, frame) = payload.get
-        idsRow.update(0, matched)
-        val gs = groups.eval(withIds(row, idsRow)).asInstanceOf[ArrayData]
-        if (gs == null) return 0L
-        var n = 0L
-        var i = 0
-        while (i < gs.numElements()) {
-          if (!gs.isNullAt(i)) {
-            val g = gs.getStruct(i, nGroupFields)
-            if (!g.isNullAt(roleIdx)) {
-              groupRow.update(0, g)
-              val f = frame.eval(withGroup(row, groupRow))
-              val text = if (f == null) null else f.toString
-              val to = g.getArray(groupIdsIdx)
-              var j = 0
-              while (j < to.numElements()) {
-                sink.offer(CdcStream.Delivery(to.getUTF8String(j).toString, text))
-                j += 1
-              }
-              n += to.numElements()
-            }
+  /** One deserialized copy of a kernel's program with its per-row scratch.
+    * Not thread-safe (the expressions hold evaluation state, such as the
+    * `to_json` evaluator and the payload groups' bound record JSON): one
+    * task at a time, borrowed from the pool by [[using]]. */
+  final class Runner private[Router] (p: Program) {
+    private val idsRow = new GenericInternalRow(1)
+    private val groupRow = new GenericInternalRow(1)
+    private val withIds = new JoinedRow()
+    private val withGroup = new JoinedRow()
+
+    /** Gate key of `row`: its tenant as a string ("null" for NULL), or
+      * "*" without a tenant column. */
+    def tenantOf(row: InternalRow): String = p.tenant match {
+      case Some(t) => t.eval(row).toString
+      case None => "*"
+    }
+
+    /** Offer `row`'s deliveries to `sink`; returns how many. Rows with
+      * no match and null-role groups deliver nothing; the frame is
+      * evaluated and decoded once per (change × group). */
+    def route(row: InternalRow, sink: CdcStream.DeliverySink): Long = {
+      val matched = p.ids.eval(row).asInstanceOf[ArrayData]
+      if (matched.numElements() == 0 || p.payload.isEmpty) return 0L
+      val (groups, frame) = p.payload.get
+      idsRow.update(0, matched)
+      val gs = groups.eval(withIds(row, idsRow)).asInstanceOf[ArrayData]
+      var n = 0L
+      var i = 0
+      while (i < gs.numElements()) {
+        val g = gs.getStruct(i, p.nGroupFields)
+        if (!g.isNullAt(p.roleIdx)) {
+          groupRow.update(0, g)
+          val f = frame.eval(withGroup(row, groupRow))
+          val text = if (f == null) null else f.toString
+          val to = g.getArray(p.groupIdsIdx)
+          var j = 0
+          while (j < to.numElements()) {
+            sink.offer(CdcStream.Delivery(to.getUTF8String(j).toString, text))
+            j += 1
           }
-          i += 1
+          n += to.numElements()
         }
-        n
+        i += 1
       }
+      n
     }
   }
+
+  private val nextKernelId = new java.util.concurrent.atomic.AtomicLong()
+
+  private def serialize(p: Program): Array[Byte] = {
+    val b = SparkEnv.get.closureSerializer.newInstance().serialize(p)
+    val bytes = new Array[Byte](b.remaining())
+    b.get(bytes)
+    bytes
+  }
+
+  /** This JVM's idle runners, least recently returned first, across all
+    * kernels: at most one per task slot, so the pool never holds more
+    * copies than the tasks that could run at once. */
+  private val idle = new java.util.ArrayDeque[(Long, Runner)]()
+  private val deserialized = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Kernels deserialized in this JVM so far (spec surface). */
+  private[cdc] def kernelsDeserialized: Long = deserialized.get()
+
+  /** Idle pooled runners, of one kernel or of all (spec surface). */
+  private[cdc] def idleRunners(kernelId: Option[Long] = None): Int = idle.synchronized {
+    var n = 0
+    idle.forEach(e => if (kernelId.forall(_ == e._1)) n += 1)
+    n
+  }
+
+  /** Task slots of this JVM: local mode's threads on the driver, the
+    * executor's cores elsewhere, over `spark.task.cpus`. */
+  private[cdc] def taskSlots: Int = org.apache.spark.sql.graft.SlotBridge.taskSlots(SparkEnv.get)
+
+  /** Run `f` on a runner of `k`: a pooled one, else a fresh deserialized
+    * copy; returned to the pool when `f` completes (a runner whose task
+    * threw is dropped). */
+  private def using[A](k: Shipped)(f: Runner => A): A = {
+    val pooled = idle.synchronized {
+      val it = idle.descendingIterator()
+      var found: Runner = null
+      while (found == null && it.hasNext) {
+        val e = it.next()
+        if (e._1 == k.id) { found = e._2; it.remove() }
+      }
+      found
+    }
+    val r = if (pooled != null) pooled else {
+      deserialized.incrementAndGet()
+      new Runner(SparkEnv.get.closureSerializer.newInstance()
+        .deserialize[Program](java.nio.ByteBuffer.wrap(k.bytes)))
+    }
+    val a = f(r)
+    val slots = taskSlots
+    idle.synchronized {
+      idle.addLast((k.id, r))
+      while (idle.size() > slots) idle.removeFirst()
+    }
+    a
+  }
+
+  private def dropRunners(kernelId: Long): Unit =
+    idle.synchronized(idle.removeIf(_._1 == kernelId))
 
   private final case class Key(subs: Seq[Subscription], schema: StructType,
       dataSchema: StructType, table: String, pk: Seq[String],
       tenantCol: Option[String], confs: Map[String, String])
 
   private val memo = new java.util.LinkedHashMap[Key, Kernel](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[Key, Kernel]): Boolean =
-      size() > MemoBound
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, Kernel]): Boolean = {
+      val evict = size() > MemoBound
+      if (evict) dropRunners(e.getValue.id)
+      evict
+    }
   }
 
   /** Entries in the kernel memo (spec surface). */
@@ -162,9 +246,9 @@ object Router {
     }
     val tenant = k.tenantCol.map(tc =>
       bind(spark, k.schema, coalesce(col(tc).cast("string"), lit("null"))))
-    new Kernel(ids, payload, tenant, groupType.length,
+    new Kernel(new Program(ids, payload, tenant, groupType.length,
       groupType.fieldNames.indexOf("claims_role"),
-      groupType.fieldNames.indexOf("subscription_ids"))
+      groupType.fieldNames.indexOf("subscription_ids")))
   }
 
   /** `c` resolved against an empty relation of `schema`, runtime-replaced
@@ -182,23 +266,24 @@ object Router {
 
   /** Per-key row counts of `rows` (the gate's tally): one narrow job,
     * each task counting its partition, merged here. */
-  private[cdc] def tally(rows: RDD[InternalRow], kernel: Kernel): Map[String, Long] =
-    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-      val r = kernel.runner()
+  private[cdc] def tally(rows: RDD[InternalRow], kernel: Kernel): Map[String, Long] = {
+    val k = kernel.shipped
+    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => using(k) { r =>
       val m = scala.collection.mutable.HashMap.empty[String, Long]
       it.foreach { row => val t = r.tenantOf(row); m(t) = m.getOrElse(t, 0L) + 1L }
       m.toMap
     }).foldLeft(Map.empty[String, Long]) { (acc, part) =>
       part.foldLeft(acc) { case (a, (t, n)) => a.updated(t, a.getOrElse(t, 0L) + n) }
     }
+  }
 
   /** Route every row of `rows` whose gate key is not in `shed` to `sink`,
     * on the executors, one pass; `flush` once per partition. Returns
     * (rows routed, deliveries offered). */
   private[cdc] def deliver(rows: RDD[InternalRow], kernel: Kernel, sink: CdcStream.DeliverySink,
-      shed: Set[String]): (Long, Long) =
-    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-      val r = kernel.runner()
+      shed: Set[String]): (Long, Long) = {
+    val k = kernel.shipped
+    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => using(k) { r =>
       var (n, d) = (0L, 0L)
       it.foreach { row =>
         if (shed.isEmpty || !shed.contains(r.tenantOf(row))) {
@@ -209,4 +294,5 @@ object Router {
       sink.flush()
       (n, d)
     }).foldLeft((0L, 0L)) { case ((n, d), (pn, pd)) => (n + pn, d + pd) }
+  }
 }

@@ -1,8 +1,11 @@
 package graft.walrus
 
 import graft.model.Subscription
+import graft.plans.{BindOnce, GroupSplit}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Client-payload shaping for matched changes — the output half of the
@@ -14,24 +17,25 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
   *
   * Each group is one arm of a SINGLE projection over the matched stream
   * (no shuffle, ONE scan): per change row we build an array of per-group
-  * payload structs — `when(size(ids)>0, struct(role, cols, record, …))` —
-  * and `inline` it, the same battery trick as [[Walrus.matchSubscriptions]].
-  * The record is serialized to JSON **once per group** before any
-  * per-subscriber fan-out — encode-once (O6) — and a group's JSON build is
-  * only evaluated when the group matched (CaseWhen laziness). The previous
+  * payload structs — `struct(role, cols, record, …, ids)` for each group
+  * with a matching id — and `inline` it, the same battery trick as
+  * [[Walrus.matchSubscriptions]]. The record is serialized to JSON **once
+  * per group** before any per-subscriber fan-out — encode-once (O6) — and
+  * a group's JSON build is only evaluated when the group matched. The previous
   * shape (G unioned branches, each re-scanning `matched`) was G× I/O on a
   * 100 TB micro-batch; this is 1×.
   *
-  * The split of a change's matched ids into groups is constant
-  * membership ([[byGroupIds]]): each group's id set is built once with
-  * the expression, and per change one order-preserving pass over the
-  * sorted `subscription_ids` selects each group's ids, once per (change ×
-  * group). Interpreted, as the CDC router evaluates it, on the
-  * 200-subscription `cdc` registry (two groups, 37 deliveries per
-  * change; one core of a 4-cpu host) the groups column costs 23–31 µs
-  * per change: ~12 µs the split, most of the rest the record JSON
-  * (~1.4 µs per build, built 2–3× per matched group for the 413 size
-  * check).
+  * The split of a change's matched ids into groups is one native pass
+  * ([[graft.plans.GroupSplit]]): the sorted `subscription_ids` are walked
+  * once, each id mapped to its groups through a constant id → groups map,
+  * and only a group with an id evaluates its arm. Each matched group's
+  * full record JSON is built once per (change × group) and bound
+  * ([[graft.plans.BindOnce]]) for its three reads: the 413 size check,
+  * the record, and `old_record`'s size check. Interpreted, as the CDC
+  * router evaluates it, on the 200-subscription `cdc` registry (37
+  * deliveries per change; one core of a 4-cpu host) the groups column
+  * costs 5–7 µs per change, against 18–19 µs with the `filter`/
+  * `transform` split and the record JSON built for every read.
   *
   * Payload fidelity (reference migration 20260626120000:583-647):
   *  - `record` only for INSERT/UPDATE (else absent);
@@ -57,7 +61,6 @@ object Payload {
   private def jsonObj(
       fields: Seq[(String, Column, org.apache.spark.sql.types.DataType)]): Column =
     if (fields.forall(f => graft.plans.JsonStructProject.supports(f._3))) {
-      import org.apache.spark.sql.graft.ColumnBridge
       ColumnBridge.column(graft.plans.JsonStructProject(
         fields.map(_._1), fields.map(f => ColumnBridge.expression(f._2))))
     } else
@@ -155,7 +158,10 @@ object Payload {
     val branches = groups.map { case ((role, selected), ss) =>
       val keep = Walrus.projectRecord(dataCols, selected, pk)
       def dt(c: String) = schema(c).dataType
-      val recordFull = jsonObj(keep.map(c => (c, col(c), dt(c))))
+      // the full record JSON, built once per (change × group) by the
+      // group's BindOnce; the size checks and the record read `full`
+      val full = NamedLambdaVariable("record_json", StringType, nullable = true)
+      val recordFull = ColumnBridge.column(full)
       val recordTrunc = jsonObj(keep.map(c =>
         (c, when(octet_length(col(c).cast(StringType)) > 64, lit(null))
           .otherwise(col(c)), dt(c))))
@@ -185,56 +191,32 @@ object Payload {
         if (noPk || denied) lit(null).cast(StringType)
         else when(isIns || isUpd,
           when(tooLarge, recordTrunc).otherwise(recordFull))
-      (ss.map(_.subscriptionId), (ids: Column) => struct(
-        lit(role).as("claims_role"),
+      val arm = struct(
+        typedLit[String](role).as("claims_role"),
         lit(if (selected.isEmpty) "" else selected.sorted.mkString(","))
           .as("selected_columns"),
         rec.as("record"),
         (if (noPk || denied) lit(null).cast(StringType) else oldJson)
           .as("old_record"),
-        errs.as("errors"),
-        ids.as("subscription_ids")))
+        errs.as("errors"))
+      // a 400/401 group never reads the record JSON: nothing to bind
+      (ss.map(_.subscriptionId),
+        if (noPk || denied) arm
+        else ColumnBridge.column(BindOnce(full,
+          ColumnBridge.expression(jsonObj(keep.map(c => (c, col(c), dt(c))))),
+          ColumnBridge.expression(arm))))
     }
-    if (branches.isEmpty) None else Some(byGroupIds(branches))
+    if (branches.isEmpty) None else Some(split(branches))
   }
 
   /** The payload-group array over `subscription_ids` (sorted in binary
-    * UTF8 order, as the match battery emits it): per group, its member
-    * ids among the change's matched ids, and `arm(ids)` when there is at
-    * least one; groups with none are dropped.
-    *
-    * Membership is a per-registry constant: each group's ids are an
-    * `InSet` built once with the expression, and a change's subset is ONE
-    * order-preserving pass over its sorted ids, so the subset comes out
-    * sorted with no per-row sort. A duplicate id (the battery emits an id
-    * once per arm it matched in) sits next to its twin, so comparing with
-    * the previous element drops it. The G subsets are computed once per
-    * change and bound to a lambda variable (a one-element `transform`),
-    * so the `size > 0` test and the value read the same array.
-    *
-    * Not `sort_array(array_intersect(subscription_ids, array(<group's
-    * ids>)))`: that builds the group's literal array and hashes it into
-    * a fresh set per change, interpreted even under codegen. On the
-    * 200-subscription `cdc` registry (two groups, 160 and 40 ids) one
-    * such split over both groups costs 31–37 µs per change; this one
-    * ~12 µs, ~6 µs of it the duplicate check. */
-  private def byGroupIds(branches: Seq[(Seq[String], Column => Column)]): Column = {
-    import org.apache.spark.sql.catalyst.expressions.InSet
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.unsafe.types.UTF8String
-    val ids = col("subscription_ids")
-    val subsets = branches.map { case (members, _) =>
-      val set: Set[Any] = members.map(UTF8String.fromString).toSet
-      filter(ids, (x, i) =>
-        ColumnBridge.column(InSet(ColumnBridge.expression(x), set)) &&
-          // 1-based element_at(ids, i) is ids[i - 1]; `||` skips it at i = 0
-          (i === 0 || x =!= element_at(ids, i)))
-    }
-    element_at(transform(array(array(subsets: _*)), sub =>
-      filter(array(branches.map(_._2).zipWithIndex.map { case (arm, g) =>
-        when(size(sub.getItem(g)) > 0, arm(sub.getItem(g)))
-      }: _*), b => b.isNotNull)), 1)
-  }
+    * UTF8 order, as the match battery emits it): per group with at least
+    * one of the change's ids, its arm struct with those ids appended as
+    * `subscription_ids` — one [[GroupSplit]] pass per change, each
+    * group's membership a per-registry constant. */
+  private def split(branches: Seq[(Seq[String], Column)]): Column =
+    ColumnBridge.column(GroupSplit(ColumnBridge.expression(col("subscription_ids")),
+      branches.map(b => ColumnBridge.expression(b._2)), branches.map(_._1)))
 
   /** [[shape]] for the generic decoded-WAL stream (record/old_record as
     * `map<string,string>`, multi-table): the same single-pass per-group
@@ -266,7 +248,6 @@ object Payload {
       // project+serialize is ONE native call ([[graft.plans.JsonMapProject]])
       // — map_filter (interpreted HOF) + to_json (CodegenFallback) would
       // drop every arm out of whole-stage codegen
-      import org.apache.spark.sql.graft.ColumnBridge
       val perTable = pkByTable.toSeq.sortBy(_._1.toString).map {
         case ((sch, tbl), pks) =>
           val keep =
@@ -287,13 +268,12 @@ object Payload {
         if (!hasOld) lit(null).cast(StringType)
         else when(isUpd, keepJson(col("old_record"), selected, pkOnly = false))
           .when(isDel, keepJson(col("old_record"), selected, pkOnly = rlsEnabled))
-      (ss.map(_.subscriptionId), (ids: Column) => struct(
-        lit(role).as("claims_role"),
+      (ss.map(_.subscriptionId), struct(
+        typedLit[String](role).as("claims_role"),
         lit(if (selected.isEmpty) "" else selected.sorted.mkString(","))
           .as("selected_columns"),
         rec.as("record"),
-        old.as("old_record"),
-        ids.as("subscription_ids")))
+        old.as("old_record")))
     }
     if (branches.isEmpty)
       matched.sparkSession.createDataFrame(
@@ -309,7 +289,7 @@ object Payload {
           StructField("old_record", StringType),
           StructField("subscription_ids", ArrayType(StringType)))))
     else {
-      val arms = byGroupIds(branches)
+      val arms = split(branches)
       matched
         .select(col("change_schema"), col("change_table"), col(Walrus.TypeCol),
           col("commit_timestamp"), arms.as("_groups"))

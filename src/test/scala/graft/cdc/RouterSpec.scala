@@ -132,18 +132,66 @@ class RouterSpec extends SparkSpec {
   }
 
   test("structural lock: the bound groups split ids by constant membership, no per-row id set") {
-    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, CreateArray, InSet,
-      Literal, SortArray}
+    import graft.plans.{BindOnce, GroupSplit, JsonStructProject}
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, BoundReference,
+      Expression, HigherOrderFunction, InSet, SortArray}
     val gs = Router.kernel(spark, schema, subs, dataSchema, "events", Seq("event_id"),
       Some("tenant")).groupsExpr.get
-    assert(gs.find(_.isInstanceOf[ArrayIntersect]).isEmpty)
-    assert(gs.find(_.isInstanceOf[SortArray]).isEmpty)
     assert(gs.find {
-      case a: CreateArray => a.children.forall(_.isInstanceOf[Literal])
+      case _: HigherOrderFunction | _: InSet | _: ArrayIntersect | _: SortArray => true
       case _ => false
-    }.isEmpty, "no per-row array of literals")
-    // one constant id set per payload group (the registry has four)
-    assert(gs.collect { case s: InSet => s }.size == 4)
+    }.isEmpty, "no interpreted HOF split, no per-row id set")
+    assert(gs.collect { case s: GroupSplit => s }.size == 1)
+    // a full record JSON serializes the group's current columns as they are
+    val fields = schema.fieldNames :+ "subscription_ids"
+    def fullRecord(e: Expression): Boolean = e match {
+      case j: JsonStructProject => j.children.forall {
+        case b: BoundReference => !fields(b.ordinal).startsWith("old_")
+        case _ => false
+      }
+      case _ => false
+    }
+    // the registry has four payload groups: one build each, bound once
+    assert(gs.collect { case e if fullRecord(e) => e }.size == 4)
+    assert(gs.collect { case b: BindOnce if fullRecord(b.value) => b }.size == 4)
+  }
+
+  test("kernel shipping: one copy per task slot, reused across batches, dropped on eviction") {
+    assert(Router.taskSlots == 4, "the spec session is local[4]")
+    val wide = batch.repartition(16)
+    // the differential holds with more partitions than slots
+    val want = sorted(reference(batch, subs))
+    assert(sorted(routed(wide, subs, gated = true)._2) == want)
+    // once a batch has run as many tasks at once as there are slots, an
+    // unchanged registry's later batches deserialize no kernel
+    val gatedId = Router.kernel(spark, schema, subs, dataSchema, "events", Seq("event_id"),
+      Some("tenant")).id
+    var warm = 0
+    while (Router.idleRunners(Some(gatedId)) < Router.taskSlots && warm < 10) {
+      routed(wide, subs, gated = true)
+      warm += 1
+    }
+    assert(Router.idleRunners(Some(gatedId)) == Router.taskSlots)
+    val before = Router.kernelsDeserialized
+    for (_ <- 1 to 3) assert(sorted(routed(wide, subs, gated = true)._2) == want)
+    assert(Router.kernelsDeserialized == before)
+    // alternating registries never leave more idle runners than slots
+    val other = subs.filter(_.claimsRole != "anon")
+    for (_ <- 1 to 3; registry <- Seq(subs, other)) {
+      routed(wide, registry, gated = true)
+      assert(Router.idleRunners() <= Router.taskSlots)
+    }
+    // a kernel evicted from the memo takes its idle runners with it
+    val k = Router.kernel(spark, schema, other, dataSchema, "events", Seq("event_id"), None)
+    routed(batch, other, gated = false)
+    assert(Router.idleRunners(Some(k.id)) > 0)
+    (1 to Router.MemoBound).foreach { i =>
+      Router.kernel(spark, schema, Seq(Subscription(s"evict$i", "public", "events", Nil)),
+        dataSchema, "events", Seq("event_id"), None)
+    }
+    assert(!(Router.kernel(spark, schema, other, dataSchema, "events", Seq("event_id"),
+      None) eq k), "evicted")
+    assert(Router.idleRunners(Some(k.id)) == 0)
   }
 
   test("kernel memo: equal registry reuses, a changed registry or SQL conf rebuilds, bound 8") {

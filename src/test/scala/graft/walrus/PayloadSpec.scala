@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * error-row matrix (400 no-pk, 401 unauthorized, 413 oversize). */
 class PayloadSpec extends SparkSpec {
   import spark.implicits._
-  import PayloadSpec.{Chg, IdsRow}
+  import PayloadSpec.{Chg, IdsRow, ShapeRow}
 
   lazy val matched = {
     val changes = Seq(
@@ -42,6 +42,78 @@ class PayloadSpec extends SparkSpec {
         when(size(ids) > 0, struct(lit(role).as("claims_role"),
           lit(sel.mkString(",")).as("selected_columns"), ids.as("subscription_ids")))
       }: _*), _.isNotNull)
+
+  /** The `groups` column `GroupSplit` and `BindOnce` replaced, kept as
+    * the reference: each group's record JSON built for every read (413
+    * size check, record, `old_record`'s size check), and the split an
+    * `InSet` filter per group under `transform`. */
+  private def referenceGroups(schema: org.apache.spark.sql.types.StructType,
+      registry: Seq[Subscription], dataCols: Seq[String], pk: Seq[String], maxBytes: Int,
+      unauthorizedRoles: Set[String], rlsEnabled: Boolean): Column = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    def jsonObj(fields: Seq[(String, Column, org.apache.spark.sql.types.DataType)]): Column =
+      if (fields.forall(f => graft.plans.JsonStructProject.supports(f._3)))
+        ColumnBridge.column(graft.plans.JsonStructProject(
+          fields.map(_._1), fields.map(f => ColumnBridge.expression(f._2))))
+      else to_json(struct(fields.map { case (n, c, _) => c.as(n) }: _*))
+    val hasOld = schema.fieldNames.exists(_.startsWith("old_"))
+    val noPk = pk.isEmpty
+    val isIns = col(Walrus.TypeCol) === "INSERT"
+    val isUpd = col(Walrus.TypeCol) === "UPDATE"
+    val isDel = col(Walrus.TypeCol) === "DELETE"
+    val branches = registry.groupBy(s => (s.claimsRole, s.selectedColumns.sorted)).toSeq
+      .sortBy { case ((role, sel), _) => (Option(role), sel.mkString(",")) }
+      .map { case ((role, selected), ss) =>
+        val keep = Walrus.projectRecord(dataCols, selected, pk)
+        def dt(c: String) = schema(c).dataType
+        val recordFull = jsonObj(keep.map(c => (c, col(c), dt(c))))
+        val recordTrunc = jsonObj(keep.map(c =>
+          (c, when(octet_length(col(c).cast(StringType)) > 64, lit(null))
+            .otherwise(col(c)), dt(c))))
+        val tooLarge = octet_length(recordFull) > maxBytes
+        val oldJson =
+          if (hasOld) {
+            val oldKeep = keep.filter(c => schema.fieldNames.contains(s"old_$c"))
+            val delKeep = if (rlsEnabled) oldKeep.filter(pk.contains) else oldKeep
+            def enc(cols: Seq[String]): Column = when(tooLarge,
+                jsonObj(cols.map(c =>
+                  (c, when(octet_length(col(s"old_$c").cast(StringType)) > 64,
+                      lit(null)).otherwise(col(s"old_$c")), dt(s"old_$c")))))
+              .otherwise(jsonObj(cols.map(c => (c, col(s"old_$c"), dt(s"old_$c")))))
+            when(isUpd, enc(oldKeep)).when(isDel, enc(delKeep))
+          } else lit(null).cast(StringType)
+        val denied = unauthorizedRoles.contains(role)
+        val errs =
+          if (noPk) typedLit(Seq(Payload.Err400))
+          else if (denied) typedLit(Seq(Payload.Err401))
+          else when(tooLarge, typedLit(Seq(Payload.Err413)))
+            .otherwise(lit(null).cast(ArrayType(StringType)))
+        val rec =
+          if (noPk || denied) lit(null).cast(StringType)
+          else when(isIns || isUpd, when(tooLarge, recordTrunc).otherwise(recordFull))
+        (ss.map(_.subscriptionId), (ids: Column) => struct(
+          lit(role).as("claims_role"),
+          lit(if (selected.isEmpty) "" else selected.sorted.mkString(","))
+            .as("selected_columns"),
+          rec.as("record"),
+          (if (noPk || denied) lit(null).cast(StringType) else oldJson).as("old_record"),
+          errs.as("errors"),
+          ids.as("subscription_ids")))
+      }
+    val ids = col("subscription_ids")
+    val subsets = branches.map { case (members, _) =>
+      val set: Set[Any] = members.map(UTF8String.fromString).toSet
+      filter(ids, (x, i) =>
+        ColumnBridge.column(InSet(ColumnBridge.expression(x), set)) &&
+          (i === 0 || x =!= element_at(ids, i)))
+    }
+    element_at(transform(array(array(subsets: _*)), sub =>
+      filter(array(branches.map(_._2).zipWithIndex.map { case (arm, g) =>
+        when(size(sub.getItem(g)) > 0, arm(sub.getItem(g)))
+      }: _*), b => b.isNotNull)), 1)
+  }
 
   private def binarySorted(ids: Seq[String]): Seq[String] =
     ids.sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
@@ -121,6 +193,47 @@ class PayloadSpec extends SparkSpec {
       }
     }
     // the seeded rows exercise every case the split must get right
+    assert(seen.values.forall(_ > 0), seen)
+  }
+
+  test("differential: groups equals the HOF split with its JSON rebuilt per read") {
+    val pool = (0 until 12).map(i => f"s$i%02d") :+ "\uFF21"
+    var seen = Map("413" -> 0, "old_record" -> 0, "duplicate" -> 0, "empty" -> 0)
+    for (seed <- 1 to 2) {
+      val r = new scala.util.Random(500 + seed)
+      val subs = registry(r, 4, pool)
+      val rows = idsRows(r, pool).map { x =>
+        val long = r.nextInt(4) == 0
+        ShapeRow(x.key, Seq("INSERT", "UPDATE", "DELETE", "TRUNCATE")(r.nextInt(4)),
+          x.commit_timestamp, x.id, if (long) "v" * 90 else x.v,
+          if (r.nextBoolean()) Some(x.id + 1) else None, if (long) "o" * 70 else s"o${x.key}",
+          x.subscription_ids)
+      }
+      rows.foreach { x =>
+        if (x.v.length > 64) seen += "413" -> (seen("413") + 1)
+        if (x.change_type == "UPDATE" || x.change_type == "DELETE")
+          seen += "old_record" -> (seen("old_record") + 1)
+        val ids = Option(x.subscription_ids).getOrElse(Seq("-"))
+        if (ids.isEmpty) seen += "empty" -> (seen("empty") + 1)
+        if (ids.distinct.size < ids.size) seen += "duplicate" -> (seen("duplicate") + 1)
+      }
+      // repartitioned: the groups run in a code-generated stage, shipped
+      val df = rows.toDF().repartition(2)
+      val denyRole = subs.head.claimsRole
+      for (pk <- Seq(Seq("id"), Nil); rls <- Seq(false, true);
+          denied <- Seq(Set.empty[String], Set(denyRole)); maxBytes <- Seq(1 << 20, 40)) {
+        def byKey(c: Column) = df.select(col("key"), c).collect()
+          .map(x => x.getInt(0) -> x.getSeq[org.apache.spark.sql.Row](1)).toMap
+        val got = byKey(Payload.groups(df.schema, subs, Seq("id", "v"), pk, maxBytes,
+          denied, rls).get)
+        val want = byKey(referenceGroups(df.schema, subs, Seq("id", "v"), pk, maxBytes,
+          denied, rls))
+        assert(got == want, s"seed=$seed pk=$pk rls=$rls denied=$denied maxBytes=$maxBytes")
+        assert(want(39).isEmpty, "null subscription_ids yields no group")
+        if (pk.nonEmpty && denied.isEmpty && maxBytes == 40)
+          assert(want.values.flatten.exists(g => g.getSeq[String](4) == Seq(Payload.Err413)))
+      }
+    }
     assert(seen.values.forall(_ > 0), seen)
   }
 
@@ -205,4 +318,6 @@ object PayloadSpec {
       commit_timestamp: String)
   case class IdsRow(key: Int, change_type: String, commit_timestamp: String,
       id: Long, v: String, subscription_ids: Seq[String])
+  case class ShapeRow(key: Int, change_type: String, commit_timestamp: String,
+      id: Long, v: String, old_id: Option[Long], old_v: String, subscription_ids: Seq[String])
 }
