@@ -75,7 +75,8 @@ object Bench {
   }
 
   /** The session every harness main uses: `cpus` local cores and as
-    * many shuffle partitions, UTC, no UI. */
+    * many shuffle partitions, UTC, no UI, and its streams' checkpoints
+    * written by [[graft.cdc.LocalCheckpointFiles]]. */
   def session(cpus: String, aqe: Boolean = true,
       logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
@@ -86,6 +87,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    graft.cdc.LocalCheckpointFiles.install(spark)
     spark
   }
 

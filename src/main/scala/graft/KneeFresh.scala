@@ -184,6 +184,7 @@ object KneeFresh {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.cdc.LocalCheckpointFiles.install(spark)
     // one warm pass: codegen/planning paid once, like every window's
     // own warmupSec handles JIT inside the window
     graft.cdc.StreamLatency.run(spark, 1000, 4, 100L, 2)

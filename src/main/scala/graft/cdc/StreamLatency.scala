@@ -280,7 +280,16 @@ object StreamLatency {
     * and a degraded reading marks the knee artifact suspect (the r11
     * adjudication gap: the driver's recorded knee was taken minutes after
     * its own correctness marathon and under-read the quiet-host truth
-    * with nothing in the JSON saying so). */
+    * with nothing in the JSON saying so).
+    *
+    * This floor moves with the engine's checkpoint writes: `busyMs` sums
+    * whole trigger times, which include the two checkpoint log writes
+    * of each micro-batch. The sessions of [[graft.KneeFresh]] and Bench
+    * write them through [[LocalCheckpointFiles]], which starts no
+    * process per micro-batch where Hadoop's manager started 20 on a host
+    * without its native library, so a reading taken since reads higher
+    * than one taken before on the same host; `KneeFresh`'s committed
+    * band predates the change. */
   def rawFloor(spark: SparkSession, ratePerSec: Int, seconds: Int): RawFloor = {
     import spark.implicits._
     System.gc(); Thread.sleep(200L)

@@ -3,15 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazy). */
+/** Shared local session for specs (one per suite, lazy). Its streams
+  * write their checkpoints through the engine's manager
+  * ([[graft.cdc.LocalCheckpointFiles.install]]), whichever suite starts
+  * the first stream. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.cdc.LocalCheckpointFiles.install(s)
+    s
+  }
 
   /** Poll a memory sink until it holds `n` rows. Streaming tests with a
     * ProcessingTimeTimeout reap sequence on this instead of

@@ -99,6 +99,57 @@ class CdcRecoverySpec extends SparkSpec {
       .distinct.size == 4)
   }
 
+  test("restart across checkpoint file managers, both directions: none " +
+      "lost, only the crashed epoch replayed") {
+    val sparks = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager].getName
+    val ours = classOf[LocalCheckpointFiles].getName
+    val installed = spark.conf.get(LocalCheckpointFiles.ConfKey)
+    Seq(sparks -> ours, ours -> sparks).foreach { case (first, second) =>
+      val src = tmp("mgr-src"); val ckpt = tmp("mgr-ckpt")
+      val bus = CdcStream.MemoryBus()
+      val runId = "mgr-" + System.nanoTime()
+      def life(manager: String) = {
+        spark.conf.set(LocalCheckpointFiles.ConfKey, manager)
+        try CdcStream.start(
+          spark.readStream.schema(Seq.empty[Change].toDS().schema)
+            .option("maxFilesPerTrigger", 1).parquet(src),
+          subs, dataSchema, "t", pk = Seq("id"), bus = bus, triggerMs = 10L,
+          deliverTo = Some(new CrashingSink(bus, runId)), checkpointLocation = Some(ckpt))
+        finally spark.conf.set(LocalCheckpointFiles.ConfKey, installed)
+      }
+      // which manager wrote a batch file: Spark's leaves a .crc beside it
+      def byspark(log: String, batch: Int) =
+        new java.io.File(ckpt, s"$log/.$batch.crc").exists()
+      writeChanges(src, 1 to 3)
+      val q1 = life(first)
+      try q1.processAllAvailable() finally q1.stop()
+      assert(idsOf(bus).sorted == Seq(1L, 2L, 3L))
+      assert(byspark("offsets", 0) == (first == sparks) &&
+        byspark("commits", 0) == (first == sparks))
+      // second life under the other manager: only the new file; its epoch
+      // delivers, then crashes before it commits
+      writeChanges(src, 4 to 6)
+      crashOnce.put(runId, true)
+      val q2 = life(second)
+      try intercept[StreamingQueryException] {
+        q2.processAllAvailable(); q2.awaitTermination(60000L); ()
+      } finally q2.stop()
+      assert(idsOf(bus).sorted == (1L to 6L), s"$first -> $second")
+      assert(byspark("offsets", 1) == (second == sparks))
+      assert(!new java.io.File(ckpt, "commits/1").exists())
+      // third life under the first manager again: the uncommitted epoch
+      // replays in full, the committed one does not, nothing is lost
+      writeChanges(src, 7 to 9)
+      val q3 = life(first)
+      try q3.processAllAvailable() finally q3.stop()
+      val ids = idsOf(bus)
+      assert(ids.sorted == Seq(1L, 2L, 3L, 4L, 4L, 5L, 5L, 6L, 6L, 7L, 8L, 9L),
+        s"$second -> $first: $ids")
+    }
+    assert(spark.conf.get(LocalCheckpointFiles.ConfKey) == installed)
+  }
+
   test("wal2json stream restart: registry re-harvests from replayed " +
       "self-describing rows; no frame lost or duplicated") {
     val src = tmp("w2j-src"); val ckpt = tmp("w2j-ckpt")
@@ -217,6 +268,16 @@ object CdcRecoverySpec {
       v = v * 10 + (frame.charAt(j) - '0'); j += 1
     }
     v
+  }
+
+  /** Offers to `bus`; while `crashOnce` holds `runId`, the next flush
+    * (after its partition's offers) takes it and throws. */
+  final class CrashingSink(bus: CdcStream.MemoryBus, runId: String)
+      extends CdcStream.DeliverySink {
+    def offer(d: CdcStream.Delivery): Unit = bus.offer(d)
+    override def flush(): Unit =
+      if (crashOnce.remove(runId) != null)
+        throw new RuntimeException("injected post-delivery crash")
   }
 
   private[cdc] def idsOf(bus: CdcStream.MemoryBus): Seq[Long] =

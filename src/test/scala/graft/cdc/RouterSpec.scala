@@ -201,15 +201,30 @@ class RouterSpec extends SparkSpec {
     assert(kernel(subs.map(_.copy())) eq k)
     val more = subs :+ Subscription("extra", "public", "events", Nil)
     assert(!(kernel(more) eq k))
-    val key = "spark.sql.caseSensitive"
-    val before = spark.conf.getAll.get(key) // set, not defaulted
-    spark.conf.set(key, (!spark.conf.get(key, "false").toBoolean).toString)
-    try assert(!(kernel(subs) eq k))
-    finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    /** Run `f` with `key` set to `value`, then restore it. */
+    def withConf[A](key: String, value: String)(f: => A): A = {
+      val before = spark.conf.getAll.get(key) // set, not defaulted
+      spark.conf.set(key, value)
+      try f finally before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+    withConf("spark.sql.caseSensitive",
+      (!spark.conf.get("spark.sql.caseSensitive", "false").toBoolean).toString) {
+      assert(!(kernel(subs) eq k))
+    }
+    withConf("spark.sql.session.timeZone", "America/Los_Angeles") {
+      assert(!(kernel(subs) eq k))
     }
     assert(kernel(subs) eq k)
+    // streaming confs steer no expression: setting one (CdcStream.start sets
+    // the checkpoint file manager) reuses the kernel
+    withConf(LocalCheckpointFiles.ConfKey, "some.other.Manager") {
+      withConf("spark.sql.streaming.minBatchesToRetain", "7") {
+        assert(kernel(subs) eq k)
+      }
+    }
     (1 to 12).foreach { i =>
       kernel(Seq(Subscription(s"s$i", "public", "events", Nil)))
       assert(Router.memoSize <= Router.MemoBound)

@@ -223,6 +223,7 @@ class ReplayLogBacklogSpec extends SparkSpec {
     // the curve, printed as test info: time-to-freshness and the shape
     info(s"backlog=$backlog live=${produced} cap=$cap batches=${pts.size} " +
       s"convergedAtMs=$convergedAtMs " +
+      s"worstFreshMs=${pts.drop(lastStale + 1).map(_._3).max} " +
       s"ageCurve=${pts.grouped(math.max(1, pts.size / 12)).map(_.head._3).mkString(",")}")
     ReplayLog.delete(topic)
   }
