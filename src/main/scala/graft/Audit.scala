@@ -95,7 +95,6 @@ object Audit {
     * value the plan is built from (a collect or count), or a materialised
     * intermediate (persist + count). Each is paid per execution. */
   val EagerBuilds: Set[String] = Set(
-    "a4_presence_orswot",         // collects the sync point (max seq)
     "a_gini",                     // Profile.giniConcentration: per-partition offsets
     "curation_curriculum",        // Curation.curriculumBins: per-partition offsets
     "dedup_clusters",             // Dedup.connectedComponents: persisted edges + labels

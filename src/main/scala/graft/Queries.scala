@@ -2154,8 +2154,9 @@ object Queries {
           when(col("value") < 5, "untrack").otherwise("track").as("action"),
           coalesce(col("props"), lit("")).as("meta"),
           col("event_id").as("seq"))
-        // one scalar (the sync point) — dimension-sized driver value
-        val cut = pe.agg(max("seq")).head().getLong(0) / 2
+        // the sync point, a scalar subquery the plan evaluates: the build
+        // runs no job
+        val cut = pe.select(expr("max(seq) div 2")).scalar()
         val evA = pe.where(pmod(col("seq"), lit(2)) === 0)
         val evB = pe.where(pmod(col("seq"), lit(2)) === 1)
         // r16 optimization (guide §2.4/§3): the three pairwise

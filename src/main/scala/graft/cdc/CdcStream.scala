@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.model.Subscription
-import graft.walrus.{Payload, Walrus}
+import graft.walrus.Walrus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -26,17 +26,19 @@ import scala.jdk.CollectionConverters._
   *    replication_poller.ex:404-415), never one tenant shedding everyone.
   *    The counts are a narrow per-partition tally merged on the driver —
   *    no shuffle;
-  *  - routing ([[processBatch]]): match → shape → frame is bound ONCE per
-  *    registry ([[Router]]) and each micro-batch is one pass over its rows
-  *    — no per-batch analysis, optimization or code generation;
+  *  - routing ([[processBatch]], [[processWalBatch]]): match → shape →
+  *    frame is bound ONCE per registry ([[Router]], CDC's one routing
+  *    core) and each micro-batch is one pass over its rows — no per-batch
+  *    analysis, optimization or code generation of the routing;
   *  - encode-once (O6): the payload JSON and the frame are built and
   *    decoded once per (change × payload group), then offered to each of
   *    the group's subscribers;
   *  - WAL sources ([[processWalBatch]], [[startWal]],
   *    [[startAdaptivePollWal]]): binary pgoutput, wal2json v2 and Debezium
   *    envelopes differ only in their decode step, a [[WalFormat]]; the
-  *    match → shape → frame → deliver tail, the stream attach and the
-  *    poll loop exist once for all three;
+  *    routing (the Router's WAL kernel: multi-table match, TOAST merge,
+  *    payload groups, frame), the stream attach and the poll loop exist
+  *    once for all three;
   *  - ordering: per-topic order preserved by partitioning on the table —
   *    at scale, repartition the stream by (schema, table) so each topic
   *    drains in commit order within its partition;
@@ -208,11 +210,12 @@ object CdcStream {
 
   /** One micro-batch of the WAL pipeline, for any wire format: `format`
     * harvests the batch's schemas into its cross-batch state and decodes
-    * the batch (pass the same instance every batch); the row-level changes
-    * then take one shared tail — one-pass multi-table battery match, TOAST
-    * merge by key absence (P8), per-(role, selected_columns) payload
-    * shaping, encode-once frame, subscriber explode, executor-side
-    * delivery. `nChanges` is the raw message count of the batch. */
+    * the batch (pass the same instance every batch); ONE executor-side
+    * delivery pass then routes the row-level changes through the
+    * registry's bound WAL kernel ([[Router]]), rebuilt only when a
+    * Relation changes the relation registry. `batch` is persisted for the
+    * call: the schema harvest and the delivery pass's decode both read
+    * it. `nChanges` is the raw message count of the batch. */
   def processWalBatch(
       batch: DataFrame,
       format: WalFormat,
@@ -220,45 +223,15 @@ object CdcStream {
       bus: MemoryBus,
       batchId: Long = 0L): BatchStats = {
     val tBatch0 = System.nanoTime()
-    // two passes over the micro-batch (schema harvest + decode)
     val cached = batch.persist()
     try {
       val d = format.decode(cached)
       val changes = d.changes.toDF()
         .where(col("message").isin("INSERT", "UPDATE", "DELETE", "TRUNCATE"))
         .withColumnRenamed("message", Walrus.TypeCol)
-      val matched = graft.walrus.MultiTableMatch
-        .matchSubscriptions(changes, d.tables.map { case (k, v) => k -> v._1 }, subs)
-        .where(size(col("subscription_ids")) > 0)
-      // unchanged-TOAST fallback (P8): columns the decoder marked 'u' are
-      // absent from `record` and re-appear with their old values; columns
-      // explicitly set to SQL NULL stay NULL (merge is by key absence)
-      val toastMerged = matched.withColumn("record",
-        when(col("record").isNotNull && col("old_record").isNotNull,
-          Walrus.toastMerge(col("record"), col("old_record")))
-          .otherwise(col("record")))
-      val deliveries = Payload
-        .shapeGeneric(toastMerged, subs, d.tables.map { case (k, v) => k -> v._2 })
-        .withColumn("frame", concat(
-          lit("{\"type\":\""), col(Walrus.TypeCol),
-          lit("\",\"schema\":\""), col("change_schema"),
-          lit("\",\"table\":\""), col("change_table"),
-          lit("\",\"commit_timestamp\":\""), col("commit_timestamp"),
-          lit("\",\"record\":"), coalesce(col("record"), lit("null")),
-          lit(",\"old_record\":"), coalesce(col("old_record"), lit("null")),
-          lit("}")))
-        .select(explode(col("subscription_ids")).as("subscription_id"),
-          col("frame"))
-      val acc = batch.sparkSession.sparkContext
-        .longAccumulator(s"graft.wal.deliveries.$batchId")
-      val sink: DeliverySink = bus
-      deliveries.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        var n = 0L
-        it.foreach { r => sink.offer(Delivery(r.getString(0), r.getString(1))); n += 1 }
-        sink.flush()
-        acc.add(n)
-      }
-      val stats = BatchStats(batchId, d.nMessages, acc.value, shed = false,
+      val kernel = Router.walKernel(batch.sparkSession, changes.schema, subs, d.tables)
+      val (_, nDeliveries) = Router.deliver(changes.queryExecution.toRdd, kernel, bus, Set.empty)
+      val stats = BatchStats(batchId, d.nMessages, nDeliveries, shed = false,
         durationMs = (System.nanoTime() - tBatch0) / 1000000L)
       bus.record(stats)
       stats

@@ -1,23 +1,30 @@
 package graft.cdc
 
 import graft.model.Subscription
-import graft.walrus.{Payload, Walrus}
+import graft.plans.BindOnce
+import graft.walrus.{MultiTableMatch, Payload, Walrus}
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression,
-  GenericInternalRow, JoinedRow, RuntimeReplaceable}
+  GenericInternalRow, JoinedRow, NamedLambdaVariable, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
-/** The routing of [[CdcStream.processBatch]], bound once per registry.
+/** The routing of [[CdcStream.processBatch]] and
+  * [[CdcStream.processWalBatch]], bound once per registry.
   *
-  * The match battery ([[Walrus.subscriptionIds]]), the payload groups
-  * ([[Payload.groups]]) and the frame ([[frame]]) are the same Column
-  * builders the DataFrame path uses; here they are resolved once against
+  * A kernel runs one of two programs built from the Column builders the
+  * DataFrame queries use: for one table's changes, the match battery
+  * ([[Walrus.subscriptionIds]]), the payload groups ([[Payload.groups]])
+  * and the frame ([[frame]]); for decoded WAL changes, the multi-table
+  * battery ([[MultiTableMatch.subscriptionIds]]), the payload groups
+  * ([[Payload.genericGroups]]) of the record TOAST-merged
+  * ([[Walrus.toastMerge]]) and the WAL frame. Either is resolved once against
   * an empty relation with the batch's schema, their `RuntimeReplaceable`
   * nodes replaced (interpreted eval does not run the optimizer that
   * normally does it) and bound to input ordinals. A micro-batch then runs
@@ -44,8 +51,10 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
   * the pool and the one-pass groups together, a traced `cdc` run's
   * executor CPU per 1,000 changes fell from 43 to 19 ms.
   *
-  * Bound kernels live in a value-keyed memo of [[MemoBound]] entries: the
-  * registry, the batch and data schemas, table, pk, tenant column and the
+  * Both programs share one value-keyed memo of [[MemoBound]] entries: the
+  * registry, the batch schema, what the program routes (data schema,
+  * table, pk and tenant column; or the relation registry (schema, table)
+  * → (data schema, pk), so a new or changed Relation rebuilds) and the
   * session's set SQL confs (the confs steer resolution, e.g. time zone and
   * ANSI casts), less `spark.sql.streaming.*`, which steer no expression:
   * [[CdcStream.start]] sets one, the checkpoint file manager, and a
@@ -202,9 +211,16 @@ object Router {
   private def dropRunners(kernelId: Long): Unit =
     idle.synchronized(idle.removeIf(_._1 == kernelId))
 
-  private final case class Key(subs: Seq[Subscription], schema: StructType,
-      dataSchema: StructType, table: String, pk: Seq[String],
-      tenantCol: Option[String], confs: Map[String, String])
+  /** What a kernel routes: one table's typed changes, or decoded WAL
+    * changes over a relation registry (schema, table) → (data schema, pk). */
+  private sealed trait Source
+  private final case class OneTable(dataSchema: StructType, table: String, pk: Seq[String],
+      tenantCol: Option[String]) extends Source
+  private final case class WalTables(tables: Map[(String, String), (StructType, Seq[String])])
+      extends Source
+
+  private final case class Key(subs: Seq[Subscription], schema: StructType, source: Source,
+      confs: Map[String, String])
 
   private val memo = new java.util.LinkedHashMap[Key, Kernel](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[Key, Kernel]): Boolean = {
@@ -217,12 +233,23 @@ object Router {
   /** Entries in the kernel memo (spec surface). */
   private[cdc] def memoSize: Int = memo.synchronized(memo.size())
 
-  /** The bound kernel for this registry and batch schema, built on first
-    * use and then reused from the memo. */
+  /** The bound kernel for this registry and one table's batch schema,
+    * built on first use and then reused from the memo. */
   private[cdc] def kernel(spark: SparkSession, schema: StructType, subs: Seq[Subscription],
       dataSchema: StructType, table: String, pk: Seq[String],
-      tenantCol: Option[String]): Kernel = {
-    val key = Key(subs, schema, dataSchema, table, pk, tenantCol,
+      tenantCol: Option[String]): Kernel =
+    memoised(spark, subs, schema, OneTable(dataSchema, table, pk, tenantCol))
+
+  /** The bound kernel for this registry over decoded WAL changes of
+    * `schema` and the relation registry `tables`; a batch whose Relation
+    * changes the registry gets a new one. */
+  private[cdc] def walKernel(spark: SparkSession, schema: StructType, subs: Seq[Subscription],
+      tables: Map[(String, String), (StructType, Seq[String])]): Kernel =
+    memoised(spark, subs, schema, WalTables(tables))
+
+  private def memoised(spark: SparkSession, subs: Seq[Subscription], schema: StructType,
+      source: Source): Kernel = {
+    val key = Key(subs, schema, source,
       spark.conf.getAll.filter { case (c, _) => !c.startsWith("spark.sql.streaming.") })
     memo.synchronized(Option(memo.get(key))).getOrElse {
       val k = build(spark, key)
@@ -234,20 +261,44 @@ object Router {
   private val GroupCol = "__graft_group"
 
   private def build(spark: SparkSession, k: Key): Kernel = {
-    val ids = bind(spark, k.schema, Walrus.subscriptionIds(k.subs, k.dataSchema,
-      k.table, hasType = k.schema.fieldNames.contains(Walrus.TypeCol)))
+    def g(f: String) = col(s"$GroupCol.$f")
+    // (match, payload groups over the matched rows, frame of a group, tenant)
+    val (idsCol, groupsCol, frameCol, tenantCol) = k.source match {
+      case OneTable(dataSchema, table, pk, tenantCol) =>
+        (Walrus.subscriptionIds(k.subs, dataSchema, table,
+          hasType = k.schema.fieldNames.contains(Walrus.TypeCol)),
+          Payload.groups(k.schema, k.subs, dataSchema.fieldNames.toSeq, pk),
+          frame(col(Walrus.TypeCol), col("commit_timestamp"), g("record"),
+            g("old_record"), g("errors")),
+          tenantCol)
+      case WalTables(tables) =>
+        // the match reads the new image as decoded, the payload groups
+        // read it TOAST-merged (P8): merged once per matched change
+        val merged = NamedLambdaVariable("merged_record", k.schema("record").dataType,
+          nullable = true)
+        val merge = when(col("record").isNotNull && col("old_record").isNotNull,
+          Walrus.toastMerge(col("record"), col("old_record"))).otherwise(col("record"))
+        (MultiTableMatch.subscriptionIds(tables.map { case (t, v) => t -> v._1 }, k.subs),
+          Payload.genericGroups(k.schema, k.subs, tables.map { case (t, v) => t -> v._2 },
+            record = ColumnBridge.column(merged)).map(gs => ColumnBridge.column(
+            BindOnce(merged, ColumnBridge.expression(merge), ColumnBridge.expression(gs)))),
+          concat(lit("{\"type\":\""), col(Walrus.TypeCol),
+            lit("\",\"schema\":\""), col("change_schema"),
+            lit("\",\"table\":\""), col("change_table"),
+            lit("\",\"commit_timestamp\":\""), col("commit_timestamp"),
+            lit("\",\"record\":"), coalesce(g("record"), lit("null")),
+            lit(",\"old_record\":"), coalesce(g("old_record"), lit("null")),
+            lit("}")),
+          None)
+    }
+    val ids = bind(spark, k.schema, idsCol)
     val withIds = k.schema.add(StructField("subscription_ids", ids.dataType))
-    val groups = Payload.groups(withIds, k.subs, k.dataSchema.fieldNames.toSeq, k.pk)
-      .map(bind(spark, withIds, _))
+    val groups = groupsCol.map(bind(spark, withIds, _))
     val groupType = groups.map(_.dataType.asInstanceOf[ArrayType].elementType
       .asInstanceOf[StructType]).getOrElse(new StructType())
-    val payload = groups.map { gs =>
-      def g(f: String) = col(s"$GroupCol.$f")
-      (gs, bind(spark, k.schema.add(StructField(GroupCol, groupType)),
-        frame(col(Walrus.TypeCol), col("commit_timestamp"), g("record"),
-          g("old_record"), g("errors"))))
-    }
-    val tenant = k.tenantCol.map(tc =>
+    val payload = groups.map(gs =>
+      (gs, bind(spark, k.schema.add(StructField(GroupCol, groupType)), frameCol)))
+    val tenant = tenantCol.map(tc =>
       bind(spark, k.schema, coalesce(col(tc).cast("string"), lit("null"))))
     new Kernel(new Program(ids, payload, tenant, groupType.length,
       groupType.fieldNames.indexOf("claims_role"),

@@ -284,43 +284,8 @@ object Dedup {
     * Stages: shingle+sign (narrow) → explode band keys (×bands) → self-join
     * on (band, key) → distinct pairs → verify true Jaccard on the pair's
     * shingle sets. Only the band keys and candidate ids shuffle.
-    */
-  /** MinHash signatures as a relational plan: hash each DISTINCT shingle
-    * once (vocabulary equi-join, like [[simhashDF]]'s word trick — no
-    * broadcast hint, since the shingle universe scales with the corpus;
-    * AQE decides), then per-doc element-wise minima via k codegen'd
-    * `min` aggs.
-    * Identical signatures to [[minhashSignature]].
     *
-    * MEASURED SLOWER than the narrow expression form on this corpus
-    * (10.5 s vs 4 s at sf0.1): it shuffles |shingle instances| × k hash
-    * strings into the groupBy, and md5 over short strings is cheap enough
-    * that the narrow per-doc transform wins. Kept for corpora where the
-    * distinct-shingle vocabulary is tiny relative to instance count AND
-    * signatures are wide; [[minhashNearDups]] uses the narrow form. */
-  def minhashSignaturesDF(
-      df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, k: Int): DataFrame = {
-    val base = Spread(df, col(idCol)).select(
-      col(idCol).as("id"),
-      TextAnalysis.words(col(textCol)).as("ws"))
-      .withColumn("sh", shinglesOfWords(col("ws"), shingleN))
-      .select("id", "sh")
-    val toks = base.select(col("id"), explode(col("sh")).as("s"))
-    val vocab = toks.select("s").distinct()
-      .withColumn("hs", array((0 until k).map(i =>
-        md5(concat(lit(i.toString), lit(":"), col("s")))): _*))
-    val aggs = (0 until k).map(i => min(element_at(col("hs"), i + 1)).as(s"h$i"))
-    // no broadcast hint: the distinct-shingle universe scales with the
-    // corpus (far past broadcast size at scale) — AQE picks the strategy
-    val sigs = toks.join(vocab, "s")
-      .groupBy("id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
-    base.join(sigs, "id")
-  }
-
-  /** Hot-bucket guard (`maxBucket > 0`): a band bucket holding m docs
+    * Hot-bucket guard (`maxBucket > 0`): a band bucket holding m docs
     * (identical signatures across a boilerplate-heavy corpus) makes the
     * plain self-join emit m² candidate rows in ONE task. With a cap,
     * oversized buckets sub-split into ⌈m/maxBucket⌉ groups and every

@@ -39,7 +39,17 @@ object MultiTableMatch {
   def matchSubscriptions(
       changes: DataFrame,
       registry: Map[(String, String), StructType],
-      subs: Seq[Subscription]): DataFrame = {
+      subs: Seq[Subscription]): DataFrame =
+    // not fenced — same CodegenAudit-caught split-method incompatibility
+    // as Walrus.matchSubscriptions (see the comment there)
+    changes.withColumn("subscription_ids", subscriptionIds(registry, subs))
+
+  /** The `subscription_ids` column of [[matchSubscriptions]] — the one
+    * definition of the multi-table match, also bound once per registry by
+    * the CDC router's WAL kernel ([[graft.cdc.Router]]). */
+  def subscriptionIds(
+      registry: Map[(String, String), StructType],
+      subs: Seq[Subscription]): Column = {
     // resolve wildcards driver-side: a '*' subscription arms one group per
     // registered table (the catalog is the small dimension)
     val resolved: Seq[((String, String), Subscription)] = for {
@@ -74,13 +84,9 @@ object MultiTableMatch {
           gs.flatMap(_._2.map(_._2.subscriptionId)).distinct.sorted,
           Option.empty[String])
       }
-    val idsCol =
-      if (armed.isEmpty) Walrus.battery(armed)
-      else when(col(Walrus.TypeCol) === lit(ChangeType.Truncate),
-        Walrus.battery(truncArms)).otherwise(
-        Walrus.battery(armed, typeCol = Some(col(Walrus.TypeCol))))
-    // not fenced — same CodegenAudit-caught split-method incompatibility
-    // as Walrus.matchSubscriptions (see the comment there)
-    changes.withColumn("subscription_ids", idsCol)
+    if (armed.isEmpty) Walrus.battery(armed)
+    else when(col(Walrus.TypeCol) === lit(ChangeType.Truncate),
+      Walrus.battery(truncArms)).otherwise(
+      Walrus.battery(armed, typeCol = Some(col(Walrus.TypeCol))))
   }
 }

@@ -219,13 +219,8 @@ object Payload {
       branches.map(b => ColumnBridge.expression(b._2)), branches.map(_._1)))
 
   /** [[shape]] for the generic decoded-WAL stream (record/old_record as
-    * `map<string,string>`, multi-table): the same single-pass per-group
-    * arm structure, but column projection is a `map_filter` against each
-    * (group × table) keep-set (selected ∪ table pk; empty selection = all)
-    * and the JSON is `to_json` of the filtered map (text values — the
-    * wal2json-like generic form; the typed path keeps native JSON types).
-    * Record/old_record gating (INSERT/UPDATE vs UPDATE/DELETE, pk-only
-    * DELETE under RLS) matches [[shape]].
+    * `map<string,string>`, multi-table): one row per (change × payload
+    * group of [[genericGroups]] with a matching subscriber and a role).
     *
     * @param matched output of [[MultiTableMatch.matchSubscriptions]] with
     *                non-empty `subscription_ids` (sorted, as the battery
@@ -236,12 +231,46 @@ object Payload {
       matched: DataFrame,
       subs: Seq[Subscription],
       pkByTable: Map[(String, String), Seq[String]],
-      rlsEnabled: Boolean = false): DataFrame = {
-    val groups = byPayloadGroup(subs)
+      rlsEnabled: Boolean = false): DataFrame =
+    genericGroups(matched.schema, subs, pkByTable, rlsEnabled) match {
+      case None =>
+        matched.sparkSession.createDataFrame(
+          matched.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(
+            StructField("change_schema", StringType),
+            StructField("change_table", StringType),
+            StructField(Walrus.TypeCol, StringType),
+            StructField("commit_timestamp", StringType),
+            StructField("claims_role", StringType),
+            StructField("selected_columns", StringType),
+            StructField("record", StringType),
+            StructField("old_record", StringType),
+            StructField("subscription_ids", ArrayType(StringType)))))
+      case Some(arms) =>
+        matched
+          .select(col("change_schema"), col("change_table"), col(Walrus.TypeCol),
+            col("commit_timestamp"), arms.as("_groups"))
+          .select(col("change_schema"), col("change_table"), col(Walrus.TypeCol),
+            col("commit_timestamp"), inline_outer(col("_groups")))
+          .where(col("claims_role").isNotNull)
+    }
+
+  /** [[groups]] for decoded WAL rows: the same one-pass split, but
+    * projection is a per-(group × table) keep-set (selected ∪ table pk;
+    * empty selection = all) of the map, serialized as text values (the
+    * wal2json-like generic form); gating as in [[groups]]. None when
+    * `subs` is empty. Also bound by the CDC router's WAL kernel
+    * ([[graft.cdc.Router]]), which passes the TOAST-merged `record`. */
+  def genericGroups(
+      schema: StructType,
+      subs: Seq[Subscription],
+      pkByTable: Map[(String, String), Seq[String]],
+      rlsEnabled: Boolean = false,
+      record: Column = col("record")): Option[Column] = {
+    val hasOld = schema.fieldNames.contains("old_record")
     val isIns = col(Walrus.TypeCol) === "INSERT"
     val isUpd = col(Walrus.TypeCol) === "UPDATE"
     val isDel = col(Walrus.TypeCol) === "DELETE"
-    val hasOld = matched.columns.contains("old_record")
     def keepJson(m: Column, selected: Seq[String], pkOnly: Boolean): Column = {
       // per-table keep-set: arms are per GROUP, so the table pk is folded
       // in data-side via the change's (schema, table) columns. The
@@ -262,8 +291,8 @@ object Payload {
         case ((p, j), acc) => when(p, j).otherwise(acc)
       }
     }
-    val branches = groups.map { case ((role, selected), ss) =>
-      val rec = when(isIns || isUpd, keepJson(col("record"), selected, pkOnly = false))
+    val branches = byPayloadGroup(subs).map { case ((role, selected), ss) =>
+      val rec = when(isIns || isUpd, keepJson(record, selected, pkOnly = false))
       val old =
         if (!hasOld) lit(null).cast(StringType)
         else when(isUpd, keepJson(col("old_record"), selected, pkOnly = false))
@@ -275,27 +304,6 @@ object Payload {
         rec.as("record"),
         old.as("old_record")))
     }
-    if (branches.isEmpty)
-      matched.sparkSession.createDataFrame(
-        matched.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("change_schema", StringType),
-          StructField("change_table", StringType),
-          StructField(Walrus.TypeCol, StringType),
-          StructField("commit_timestamp", StringType),
-          StructField("claims_role", StringType),
-          StructField("selected_columns", StringType),
-          StructField("record", StringType),
-          StructField("old_record", StringType),
-          StructField("subscription_ids", ArrayType(StringType)))))
-    else {
-      val arms = split(branches)
-      matched
-        .select(col("change_schema"), col("change_table"), col(Walrus.TypeCol),
-          col("commit_timestamp"), arms.as("_groups"))
-        .select(col("change_schema"), col("change_table"), col(Walrus.TypeCol),
-          col("commit_timestamp"), inline_outer(col("_groups")))
-        .where(col("claims_role").isNotNull)
-    }
+    if (branches.isEmpty) None else Some(split(branches))
   }
 }

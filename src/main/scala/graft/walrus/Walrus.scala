@@ -168,11 +168,6 @@ object Walrus {
     else dataCols.filter(c => selected.contains(c) || pk.contains(c))
   }
 
-  /** Build the client-facing record JSON for a change row (encode-once, O6:
-    * serialize before any fan-out/explode). */
-  def recordJson(dataCols: Seq[String]): Column =
-    to_json(struct(dataCols.map(col): _*))
-
   /** Oversize guard (P7): when the serialized record exceeds `maxBytes`,
     * replace values longer than 64 bytes with NULL and attach a 413 error —
     * errors are in-band data, not exceptions (reference :354,654-657). */
