@@ -39,7 +39,12 @@ object Bench {
 
   /** The timing core: seconds to build `df` and force it to its full
     * result, then drop whatever the query cached (cleanup is charged to
-    * the query that cached, and caches never accumulate). */
+    * the query that cached, and caches never accumulate). A registry
+    * query is prepared ([[SparkEntry.queries]]): the suite's one-shot
+    * pass times each query's first build in the session, and the warm
+    * passes and `ab`'s reps time prepared executions (the plan re-wrapped,
+    * then optimized, planned and run), except for the builds the registry
+    * never prepares. */
   def timeOnce(spark: SparkSession, df: => DataFrame): Double = {
     val t0 = System.nanoTime()
     try { force(df); (System.nanoTime() - t0) / 1e9 }

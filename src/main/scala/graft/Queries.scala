@@ -4696,8 +4696,9 @@ object Queries {
     aggQueries ++ joinQueries ++ payloadQueries ++ error401Query ++
     presenceQueries ++ miscQueries ++ obsQueries ++ PipelineQueries.all
 
+  /** Each query's build, prepared ([[Prepared]]). */
   def queryMap: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.build).toMap
+    all.map(q => q.name -> Prepared(q.name, q.build)).toMap
 
   def oracleMap: Map[String, String] =
     all.flatMap(q => q.oracle.map(o => q.name -> o)).toMap

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -176,14 +176,18 @@ object Wal2Json {
       scala.collection.mutable.Map.empty[(String, String), (StructType, Seq[String])]
 
     def decode(batch: DataFrame): WalFormat.Decoded = {
-      // schema harvest: aggregate to the LATEST (by seq) column/pk
-      // description PER TABLE executor-side, then collect one row per
-      // distinct table — the small dimension, never the change rows. The
+      // schema harvest, executor-side, then one row per distinct table
+      // collected — the small dimension, never the change rows. A
+      // table's columns are the union of its rows' column lists (each
+      // distinct list once), the latest row's first: wal2json leaves an
+      // unchanged TOAST column out of an UPDATE's `columns`, so the latest
+      // list alone can miss one. Its pk list is the latest row's. The
       // batch row count rides the same aggregate (per-group counts summed
       // driver-side; schema-less groups — action M, malformed rows —
-      // contribute count but no registry entry, which is why max_by keys
-      // on a null-when-schema-less seq instead of a pre-filter): harvest
-      // + count is one job, not two.
+      // contribute count but no registry entry, which is why the latest
+      // row is keyed on a null-when-schema-less seq instead of a
+      // pre-filter): harvest + count is one job, not two.
+      val described = col("ns").isNotNull && col("names").isNotNull
       val harvested = decodeRaw(batch, jsonCol)
         .select(col(orderCol).cast("long").as("_seq"),
           col("wal.schema").as("ns"), col("wal.table").as("tbl"),
@@ -193,16 +197,17 @@ object Wal2Json {
         .groupBy("ns", "tbl")
         .agg(count(lit(1)).as("_n"),
           max_by(struct(col("names"), col("types"), col("pk_columns")),
-            when(col("ns").isNotNull && col("names").isNotNull, col("_seq")))
-            .as("d"))
+            when(described, col("_seq"))).as("d"),
+          collect_set(when(described, arrays_zip(col("names"), col("types")))).as("all"))
         .collect()
       harvested.foreach { r =>
         val d = r.getStruct(3)
         if (r.getString(0) != null && d != null && !d.isNullAt(0)) {
-          val names = d.getSeq[String](0)
-          val types = d.getSeq[String](1)
+          val latest = d.getSeq[String](0).zip(d.getSeq[String](1))
+          val older = r.getSeq[Seq[Row]](4).flatten.map(c => (c.getString(0), c.getString(1)))
+            .filterNot(c => latest.exists(_._1 == c._1)).distinctBy(_._1).sortBy(_._1)
           val pks = Option(d.getSeq[String](2)).getOrElse(Nil)
-          val st = StructType(names.zip(types).map { case (n, t) =>
+          val st = StructType((latest ++ older).map { case (n, t) =>
             StructField(n, sparkType(t))
           })
           tables((r.getString(0), r.getString(1))) = (st, pks)

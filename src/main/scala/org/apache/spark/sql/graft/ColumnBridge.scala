@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (Spark 4 wraps Columns in ColumnNodes; `ExpressionUtils` is the
   * sanctioned internal converter). Living under `org.apache.spark.sql` is
   * the standard pattern for libraries that ship custom Catalyst
-  * expressions; graft's only other code here is [[ListenerBridge]]. */
+  * expressions; graft's other bridges here follow it. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Plan governance in tier-1: ONE registry walk ([[Audit.walk]] at
   * sf0.001, AQE off, 4 shuffle partitions) asserting the four gates —
   * every fingerprint equals the committed PLAN_FINGERPRINTS.json, no
@@ -72,6 +74,19 @@ class PlanGovernanceSpec extends SparkSpec {
     assert(d.added == Set("fresh") && d.removed == Set("gone") && !d.isEmpty)
     assert(d.lines.size == 3)
     assert(Audit.compareFingerprints(baseline, baseline).isEmpty)
+  }
+
+  test("the fingerprint counts the operators inside subquery plans") {
+    val prev = settings
+    Pinned.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val plan = spark.sql("SELECT id, (SELECT max(n) FROM (SELECT id % 7 AS k, " +
+        "count(*) AS n FROM range(100) GROUP BY id % 7)) AS n FROM range(10)")
+        .queryExecution.executedPlan
+      assert(plan.collect { case s: ShuffleExchangeExec => s }.isEmpty, "all in the subquery")
+      // the subquery's group-by and its global max
+      assert(Audit.fingerprint(plan).get("shuffle").contains(2), Audit.fingerprint(plan))
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("fingerprint files round-trip") {

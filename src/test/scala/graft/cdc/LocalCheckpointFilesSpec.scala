@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{ChecksumException, DelegateToFileSystem, FileAlread
   Path, PathFilter, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
@@ -197,8 +197,14 @@ class LocalCheckpointFilesSpec extends SparkSpec {
     } finally q.stop()
     val jfr = Files.createTempFile("lcf", ".jfr")
     rec.dump(jfr); rec.close()
+    // only the stream's own threads count: a session of another suite
+    // cleaned up meanwhile removes its artifact directory with `rm -rf`
+    val streamThread = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .queryExecutionThread.getId
     val started = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
       .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .filter(e => Option(e.getThread).exists(t => t.getJavaThreadId == streamThread ||
+        t.getJavaName.startsWith("Executor task launch worker")))
       .map(e => e.getString("command"))
     assert(bus.deliveries.size == 12)
     assert(names(Paths.get(ckpt, "commits")).count(n => !n.startsWith(".")) >= 10)

@@ -199,6 +199,29 @@ class WalKernelSpec extends SparkSpec {
     }
   }
 
+  test("a TOAST UPDATE that is its table's last row keeps the unchanged column " +
+      "in the wal2json registry, as pgoutput's Relation does") {
+    // orders 3 is inserted before the TOAST UPDATE instead of after it, so
+    // the UPDATE, which leaves `note` out, is the last orders row that
+    // lists columns (the DELETE lists only its identity)
+    def swapped[A](xs: Seq[(Long, A)], i: Int): Seq[(Long, A)] = {
+      val v = xs.map(_._2).toIndexedSeq
+      v.updated(i, v(i + 1)).updated(i + 1, v(i)).zipWithIndex.map { case (m, j) => (j.toLong, m) }
+    }
+    val inputs: Seq[(String, () => (DataFrame, WalFormat))] = Seq(
+      "pgoutput" -> (() => (swapped(pgo, 6).toDF("seq", "m"), new PgOutput.Format("m", "seq"))),
+      "wal2json" -> (() => (swapped(w2j, 4).toDF("seq", "m"), new Wal2Json.Format("m", "seq"))))
+    for ((name, input) <- inputs) {
+      val (b, fmt) = input()
+      val (st, pk) = fmt.decode(b).tables(("public", "orders"))
+      assert(st.fieldNames.toSeq == Seq("id", "amount", "note") && pk == Seq("id"), name)
+      val want = differential(name, input, subs)
+      assert(want.exists { case (s, fr) =>
+        s == "sNote" && fr.contains(""""record":{"id":"1","note":"x"}""") },
+        s"$name: note=eq.x matches")
+    }
+  }
+
   test("differential: an empty or irrelevant registry, and an empty batch, deliver nothing") {
     val elsewhere = Seq(Subscription("sOther", "public", "other", Nil),
       Subscription("sNull", "public", "orders", Nil, claimsRole = null))
