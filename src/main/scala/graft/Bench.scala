@@ -409,6 +409,49 @@ object Bench {
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpus":$cpus,"queries":${jmap(oneshot.map(r => r._1 -> r._3))},"warm_min":${jmap(warmMin)},"failed":$failedJson,$controlJson,"sf":"$sfDir"$stream}""")
   }
 
+  /** A child JVM running `main` on this JVM's classpath and flags, with
+    * `env` added to its environment. `heap` replaces this JVM's
+    * `-Xmx`/`-Xms` with one explicit cap; None keeps them. stdout is a
+    * pipe the caller reads from `proc`, or discarded with
+    * `pipeStdout = false`. stderr goes to the file `stderr`, which every
+    * failure message names. */
+  private[graft] final class Child(main: String, args: Seq[String],
+      env: Map[String, String] = Map.empty, heap: Option[String] = None,
+      pipeStdout: Boolean = true) {
+    val stderr: java.nio.file.Path = java.nio.file.Files.createTempFile(
+      main.split('.').last + "-", ".stderr")
+    val command: Seq[String] = {
+      val own = java.lang.management.ManagementFactory
+        .getRuntimeMXBean.getInputArguments.asScala.toSeq
+      val flags = heap.fold(own)(h =>
+        own.filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms")) :+ s"-Xmx$h")
+      Seq(java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
+        flags ++ Seq("-cp", System.getProperty("java.class.path"), main) ++ args
+    }
+    val proc: Process = {
+      val pb = new ProcessBuilder(command.asJava)
+      env.foreach { case (k, v) => pb.environment().put(k, v) }
+      pb.redirectError(stderr.toFile)
+      if (!pipeStdout) pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
+      pb.start()
+    }
+
+    /** SIGKILL, then wait for the exit: the child never outlives this call. */
+    def kill(): Unit = { proc.destroyForcibly(); proc.waitFor() }
+
+    /** Waits up to `timeoutMs` and returns the exit code; a child still
+      * running at the deadline is killed and reaped, and reads None. */
+    def await(timeoutMs: Long): Option[Int] =
+      if (proc.waitFor(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
+        Some(proc.exitValue())
+      else { kill(); None }
+
+    def describe(problem: String): String = s"$main $problem; its stderr is in $stderr"
+
+    /** Drop the stderr file once the child's work checked out. */
+    def discardStderr(): Unit = java.nio.file.Files.deleteIfExists(stderr)
+  }
+
   /** Fork [[KneeFresh]] in a new JVM (same classpath and JVM flags as
     * this fork — sbt's `run / fork` gives us real values for both) and
     * return its KNEEJSON payload, or None if the fork failed — a missing
@@ -416,36 +459,30 @@ object Bench {
   private def kneeFreshForked(cpus: String,
       timeoutSec: Long = 1200L): Option[String] = {
     try {
-      val javaBin = java.nio.file.Paths
-        .get(System.getProperty("java.home"), "bin", "java").toString
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.KneeFresh")
-      val pb = new ProcessBuilder(cmd.asJava)
       // the fork must measure under the SAME parallelism as the rest of
       // the artifact: pass the parent's RESOLVED cpu count (KneeFresh's
       // own default differs, and an unset env var would silently make
       // the headline knee incomparable to every other number)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-      val proc = pb.start()
+      val child = new Child("graft.KneeFresh", Nil, Map("SPARK_GRAFT_CPUS" -> cpus))
       // drain stdout on a daemon thread: readAllBytes only returns when
       // the stream closes, so reading inline would defeat the timeout
       val sb = new java.lang.StringBuilder
       val reader = new Thread(() => {
-        try sb.append(new String(proc.getInputStream.readAllBytes(),
+        try sb.append(new String(child.proc.getInputStream.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8))
         catch { case _: Throwable => () }
       })
       reader.setDaemon(true)
       reader.start()
-      val finished = proc.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      if (!finished) { proc.destroyForcibly(); return None }
+      val exit = child.await(timeoutSec * 1000L)
       reader.join(5000L)
-      sb.toString.linesIterator.find(_.startsWith("KNEEJSON "))
+      val json = sb.toString.linesIterator.find(_.startsWith("KNEEJSON "))
         .map(_.stripPrefix("KNEEJSON "))
+      if (json.isEmpty)
+        System.err.println("[bench] " + child.describe(exit.fold(
+          s"timed out after $timeoutSec s")(c => s"exited $c without a KNEEJSON line")))
+      else child.discardStderr()
+      json
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] fresh-JVM knee fork failed: $e")

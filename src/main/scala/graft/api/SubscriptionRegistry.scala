@@ -93,15 +93,12 @@ final class SubscriptionRegistry(
       }
   }
 
-  /** Remove every entity row of a subscription id (socket DOWN path);
-    * batched deletes at scale. */
+  /** Remove every entity row of a subscription id (socket DOWN path). */
   def unsubscribe(subscriptionId: String): Int = synchronized {
     val victims = subs.keys.filter(_._1 == subscriptionId).toSeq
     subs --= victims
     victims.size
   }
-
-  def unsubscribeAll(ids: Seq[String]): Int = ids.map(unsubscribe).sum
 
   /** Re-validate all subscriptions against a new catalog (the reference
     * re-checks publication oids every 60 s, replication_poller.ex:240-292):

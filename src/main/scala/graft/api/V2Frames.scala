@@ -1,7 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Binary client-frame codec (S9) — the reference's custom V2 socket
@@ -187,15 +185,5 @@ object V2Frames {
       case other =>
         throw new IllegalArgumentException(s"unknown V2 opcode: $other")
     }
-  }
-
-  /** DataFrame-level decode of a binary frame column — a narrow typed map,
-    * no shuffle. Extra columns are dropped (select the id alongside the
-    * frame upstream and re-join if needed, or use the typed API). */
-  def decodeFrames(df: DataFrame, bytesCol: String,
-      inbound: Boolean = false): Dataset[Frame] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(bytesCol)).as[Array[Byte]].map(b => decode(b, inbound))
   }
 }

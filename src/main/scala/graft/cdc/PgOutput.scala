@@ -228,7 +228,6 @@ object PgOutput {
       while (b != 0) { sb.write(b.toInt); b = bb.get() }
       new String(sb.toByteArray, UTF_8)
     }
-    def hasRemaining: Boolean = bb.hasRemaining
   }
 
   // Full microsecond precision: the reference decodes WAL timestamps to

@@ -154,9 +154,8 @@ object StreamLatency {
     if (any && j < frame.length && frame.charAt(j) == '"') v else -1L
   }
 
-  /** Wall-clock-pinned adaptive feeder, shared by [[run]], [[rawFloor]]
-    * and the cross-process producer ([[graft.XprocProducer]]) so a
-    * pacing fix lands in ONE place: feeds `ratePerSec` Changes for
+  /** Wall-clock-pinned adaptive feeder, shared by [[run]] and
+    * [[rawFloor]] so a pacing fix lands in ONE place: feeds `ratePerSec` Changes for
     * `seconds` in 50 ms steps pinned to the wall clock (the offered
     * rate stays `ratePerSec` even when addData itself stalls briefly).
     * Each step splits into ~4k-row addData blocks, capped at 16 (rates

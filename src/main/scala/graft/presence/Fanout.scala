@@ -57,12 +57,6 @@ object Fanout {
     members.minBy(n => Muster.md5Hex(s"$senderKey:$n"))
   }
 
-  /** Driver-side twin of the sticky cast-channel pick (`sender#c` key
-    * space, disjoint from the gateway's). */
-  def channelFor(senderKey: String, channels: Int): Int =
-    if (channels <= 1) 1
-    else (1 to channels).minBy(c => Muster.md5Hex(s"$senderKey#$c"))
-
   /** Per-delivery fan-out rows: every input row × every node, tagged
     * with `node`, `region`, `hop` ∈ local|ftl|ftr|ftl_relay and the
     * sender's sticky cast `channel` ∈ 1..channels. All other input

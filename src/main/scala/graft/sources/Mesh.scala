@@ -12,15 +12,15 @@ import java.nio.charset.StandardCharsets.UTF_8
   * (`lib/realtime/gen_rpc/pub_sub.ex:47-126`); the machine boundary is
   * the one thing this sandbox cannot exercise, so — same argument as the
   * [[SocketRelay]] leg — the transport is modeled down to the last
-  * REACHABLE seam: real sockets, real frames, separate processes (the
-  * probe forks one JVM per node; the spec runs nodes in-process but
-  * still dials TCP), with the node/region topology and the two-tier
-  * forward rules byte-compatible with the relational plan. MeshSpec and
-  * the Xmesh probe assert the DIFFERENTIAL: the set of (msg, node, hop)
-  * the live mesh delivers equals [[Fanout.hopPlan]]'s answer exactly,
-  * and per-(sender, node) delivery order is publish order (each leg of
-  * the forward graph is one FIFO socket — the reference gets the same
-  * guarantee from the sender-sticky gen_rpc client, gen_rpc.ex:242).
+  * REACHABLE seam: real sockets and real frames (MeshSpec runs the
+  * nodes in-process, each dialing the others over TCP), with the
+  * node/region topology and the two-tier forward rules byte-compatible
+  * with the relational plan. MeshSpec asserts the DIFFERENTIAL: the set
+  * of (msg, node, hop) the live mesh delivers equals
+  * [[Fanout.hopPlan]]'s answer exactly, and per-(sender, node) delivery
+  * order is publish order (each leg of the forward graph is one FIFO
+  * socket — the reference gets the same guarantee from the
+  * sender-sticky gen_rpc client, gen_rpc.ex:242).
   *
   * Protocol (UTF-8 lines):
   *   `PUB <msgId> <sender>`            — a client publishes at its node

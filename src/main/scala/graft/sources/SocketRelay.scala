@@ -86,9 +86,10 @@ object SocketRelay {
 
     @volatile private var running = true
     /** Total frames written to sockets across all connections —
-      * monotonic, sampled by the probe's stats thread. (Atomic: serve
-      * runs one thread per connection since the takeover fence — a
-      * fencing TAIL must be admitted WHILE the old holder is served.) */
+      * monotonic; the in-flight window is this minus what the consumer
+      * read. (Atomic: serve runs one thread per connection since the
+      * takeover fence — a fencing TAIL must be admitted WHILE the old
+      * holder is served.) */
     private val sent = new java.util.concurrent.atomic.AtomicLong(0L)
     def sentTotal: Long = sent.get
     /** Last ACK status per partition (the consumer's flushed cursor),
@@ -345,8 +346,8 @@ object SocketRelay {
   /** Blocking client: dial, send cursors, read frames one at a time.
     * `recvBuf` is set BEFORE connect so the kernel honors it — an
     * unbounded autotuned receive window would hide the backpressure
-    * the probe measures. `slot` names a consumer group and fencing
-    * epoch (single-writer cursor ownership — see [[GroupState]]); a
+    * that `SocketRelaySpec` measures. `slot` names a consumer group and
+    * fencing epoch (single-writer cursor ownership — see [[GroupState]]); a
     * cursor offset of -1 under a slot resolves server-side to the
     * group's committed cursor. */
   final class Client(host: String, port: Int, cursors: Map[Int, Long],

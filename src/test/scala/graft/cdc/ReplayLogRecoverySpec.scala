@@ -1,12 +1,15 @@
 package graft.cdc
 
-import graft.SparkSpec
+import graft.{Bench, SparkSpec}
 import graft.model.Subscription
-import graft.sources.{ReplayLog, ReplayLogOffset}
-import org.apache.spark.sql.DataFrame
+import graft.sources.{FileReplayLog, FileReplayLogSink, ReplayLog, ReplayLogOffset}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryException
-import java.nio.file.Files
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** The external-source arm of the checkpoint/recovery story: the same
@@ -24,10 +27,13 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Plus the adapter-specific planning contracts: `maxOffsetsPerTrigger`
   * splits the backlog across micro-batches without loss or reorder, and
   * a multi-partition topic plans one task per partition with
-  * per-partition offset order preserved end to end.
+  * per-partition offset order preserved end to end. One case crosses a
+  * real process boundary: a consumer JVM killed with SIGKILL restarts
+  * from its checkpoint and loses nothing.
   */
 class ReplayLogRecoverySpec extends SparkSpec {
   import CdcRecoverySpec.crashOnce
+  import ReplayLogRecoverySpec.ledgerLines
 
   /** id from a delivered frame — the wal2json/pgoutput paths render
     * record values as strings (`"id":"3"`), unlike the typed-batch path
@@ -213,5 +219,165 @@ class ReplayLogRecoverySpec extends SparkSpec {
     assert(o.json() == """{"0":5,"1":0,"2":17}""")
     assert(ReplayLogOffset.parse(o.json()) == o)
     assert(ReplayLogOffset.parse("{}") == ReplayLogOffset(Map.empty))
+  }
+
+  test("a consumer JVM killed with SIGKILL mid-stream restarts from its " +
+      "checkpoint and loses nothing") {
+    import spark.implicits._
+    // the slot-reconnect contract across a real process death
+    // (wal_bloat_test.exs:78-160): this JVM produces through
+    // CdcStream.start into the file log, a consumer JVM tails it
+    // (ReplayLogConsumer); life 1 is killed mid-stream, life 2 restarts
+    // on the same checkpoint and drains the log
+    implicit val signaler: Signaler = ThreadSignaler
+    val t0 = System.nanoTime()
+    val root = tmp("rl-fork"); val topic = "fork"; val nSubs = 4
+    def ledger(life: Int): Path = Paths.get(root, s"ledger.$life")
+    val children = scala.collection.mutable.ArrayBuffer.empty[Bench.Child]
+    def fork(life: Int): Bench.Child = {
+      val c = new Bench.Child("graft.cdc.ReplayLogConsumer",
+        Seq(root, topic, s"$root/ckpt", ledger(life).toString, "2000"),
+        heap = Some("1g"), pipeStdout = false)
+      children += c
+      c
+    }
+    // one subscriber per log partition (the sink keys frames by
+    // subscriber); each change fans out to every subscriber
+    val subs = (0 until nSubs).map(i => Subscription(s"fork-$i", "public", "t", Nil))
+    val dataSchema = Seq.empty[StreamLatency.Change].toDS().toDF()
+      .drop("change_type", "commit_timestamp").schema
+    val input = MemoryStream[StreamLatency.Change](spark)
+    val producer = CdcStream.start(input.toDF(), subs, dataSchema, "t",
+      pk = Seq("id"), bus = CdcStream.MemoryBus(), triggerMs = 100L,
+      deliverTo = Some(new FileReplayLogSink(root, topic, nSubs)))
+    var nChanges = 0L
+    // 50 changes (200 frames) per 100 ms step
+    def feedStep(): Unit = {
+      input.addData((nChanges until nChanges + 50).map(i =>
+        StreamLatency.Change(i, "INSERT", i.toDouble, "2024-01-01T00:00:00.000Z")))
+      nChanges += 50
+      Thread.sleep(100L)
+    }
+    try TimeLimits.failAfter(Span(240, Seconds)) {
+      val life1 = fork(1)
+      while (ledgerLines(ledger(1)).map(_(0)).distinct.size < 2) {
+        assert(life1.proc.isAlive, life1.describe("exited before consuming"))
+        feedStep()
+      }
+      life1.kill()
+      producer.processAllAvailable()
+      val consumed1 = ledgerLines(ledger(1)).map(l => l(3) - l(2)).sum
+      val published = FileReplayLog.endOffsets(root, topic).values.sum
+      assert(consumed1 < published,
+        s"life 1 was killed with nothing unconsumed ($consumed1 of $published)")
+      // a kill during an append leaves a last line without its newline;
+      // the kill seldom lands there, so the case appends one: the last
+      // line less its final digit, which, if read as a line, would break
+      // the dense-range check. Its batch never committed.
+      val log1 = Files.readString(ledger(1))
+      if (log1.endsWith("\n")) {
+        val last = log1.split("\n").last
+        Files.writeString(ledger(1), last.dropRight(1), StandardOpenOption.APPEND)
+      }
+      // life 2 starts while the producer still feeds, and must take over
+      // exactly where life 1's checkpoint left off
+      val life2 = fork(2)
+      while (ledgerLines(ledger(2)).isEmpty) {
+        assert(life2.proc.isAlive, life2.describe("exited before consuming"))
+        feedStep()
+      }
+      (1 to 10).foreach(_ => feedStep())
+      producer.processAllAvailable()
+      Files.createFile(Paths.get(root, s"$topic.done"))
+      val exit = life2.await(150000L)
+      assert(exit.contains(0), life2.describe(s"ended with $exit"))
+
+      val lines = ledgerLines(ledger(1)) ++ ledgerLines(ledger(2))
+      lines.foreach(l => assert(l(4) == l(3) - l(2),
+        s"non-dense batch range: ${l.mkString(" ")}"))
+      val ends = FileReplayLog.endOffsets(root, topic)
+      assert(ends.values.sum == nChanges * nSubs,
+        s"log end offsets ${ends.values.sum} != produced ${nChanges * nSubs}")
+      ends.foreach { case (p, end) =>
+        val covered = lines.filter(_(1) == p).map(l => (l(2), l(3))).sortBy(_._1)
+          .foldLeft(0L) { case (c, (from, until)) =>
+            assert(from <= c, s"gap in partition $p: [$c, $from)")
+            math.max(c, until)
+          }
+        assert(covered == end, s"partition $p: consumed [0, $covered) of [0, $end)")
+      }
+      val redelivered = lines.map(l => l(3) - l(2)).sum - nChanges * nSubs
+      info(s"produced ${nChanges * nSubs} frames over ${ends.size} partitions; " +
+        s"life 1 consumed $consumed1 before the kill; $redelivered re-delivered; " +
+        s"wall ${(System.nanoTime() - t0) / 1000000L} ms")
+    } finally {
+      producer.stop()
+      children.foreach(_.kill())
+    }
+    assert(children.size == 2 && children.forall(!_.proc.isAlive))
+    children.foreach { c =>
+      assert(c.command.filter(_.startsWith("-Xm")) == Seq("-Xmx1g"), c.command)
+      c.discardStderr()
+    }
+    FileReplayLog.delete(root, topic)
+  }
+}
+
+object ReplayLogRecoverySpec {
+
+  /** The complete lines of a consumer ledger, as
+    * `batchId partition from untilExclusive count`. A last line without
+    * its newline is what a kill mid-append leaves, and is dropped. */
+  def ledgerLines(path: Path): Seq[Array[Long]] =
+    if (!Files.exists(path)) Nil
+    else Files.readString(path).split("\n", -1).toSeq.dropRight(1)
+      .map(_.split(" ").map(_.toLong))
+}
+
+/** The consumer JVM of [[ReplayLogRecoverySpec]]'s forked case:
+  * `ReplayLogConsumer <root> <topic> <checkpoint> <ledger> <maxOffsetsPerTrigger>`
+  * tails the file log through the `graft-replaylog` source, its
+  * checkpoint written by [[LocalCheckpointFiles]], and appends one
+  * ledger line per (micro-batch, partition) read before the batch
+  * commits. Exits 0 once `<root>/<topic>.done` exists and the query has
+  * read to the log's end offsets; exits 1 on any error. */
+object ReplayLogConsumer {
+  def main(args: Array[String]): Unit =
+    sys.exit(try { run(args); 0 } catch { case e: Throwable => e.printStackTrace(); 1 })
+
+  private def run(args: Array[String]): Unit = {
+    val Array(root, topic, ckpt, ledger, maxPerTrigger) = args
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    LocalCheckpointFiles.install(spark)
+    val q = spark.readStream.format("graft-replaylog")
+      .option("topic", topic).option("root", root)
+      .option("maxOffsetsPerTrigger", maxPerTrigger).load()
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(100L))
+      .foreachBatch { (b: DataFrame, batchId: Long) =>
+        val lines = b.groupBy("partition")
+          .agg(min("offset"), max("offset"), count(lit(1))).collect()
+          .map(r => s"$batchId ${r.getInt(0)} ${r.getLong(1)} ${r.getLong(2) + 1} " +
+            s"${r.getLong(3)}\n")
+        Files.write(Paths.get(ledger), lines.mkString.getBytes(UTF_8),
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        ()
+      }.start()
+    val done = Paths.get(root, s"$topic.done")
+    // empty micro-batches run no foreachBatch, so the drain test compares
+    // the last batch's end offsets with the log's
+    def drained: Boolean = Option(q.lastProgress).flatMap(_.sources.headOption)
+      .flatMap(s => Option(s.endOffset))
+      .exists(e => ReplayLogOffset.parse(e).parts == FileReplayLog.endOffsets(root, topic))
+    while (!(Files.exists(done) && drained)) {
+      if (!q.isActive)
+        throw q.exception.getOrElse(new IllegalStateException("consumer query stopped"))
+      Thread.sleep(100L)
+    }
+    q.stop()
+    spark.stop()
   }
 }

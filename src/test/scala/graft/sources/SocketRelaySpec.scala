@@ -6,9 +6,10 @@ import java.nio.file.Files
 
 /** The TCP relay over the file log: framing roundtrip, per-partition
   * order, cursor-addressed start, abrupt-disconnect + redial resume
-  * (the replication-slot reconnect contract at connection level), ACK
-  * status plumbing, and heartbeat keepalive when caught up. No Spark —
-  * the relay is pure I/O over the log files. */
+  * (the replication-slot reconnect contract at connection level),
+  * backpressure against a throttled client, ACK status plumbing, and
+  * heartbeat keepalive when caught up. No Spark — the relay is pure I/O
+  * over the log files. */
 class SocketRelaySpec extends AnyFunSuite {
 
   private def tmp(): String =
@@ -97,6 +98,44 @@ class SocketRelaySpec extends AnyFunSuite {
       client.close()
       assert(redelivered == 20, "uncommitted window must re-deliver exactly")
     } finally server.stop()
+  }
+
+  test("backpressure: a throttled client holds the relay's in-flight " +
+      "window under its buffer bound; the backlog stays on disk") {
+    val root = tmp(); val topic = "t"
+    val parts = 2; val perPart = 150000
+    fill(root, topic, parts, perPart)
+    // frames the relay can hold past the client: its write buffer, the
+    // send and receive socket buffers (the kernel doubles each SockBuf),
+    // the client's read buffer, and one read-ahead chunk per partition,
+    // counted at this log's smallest frame (24-byte header + "v0-0"),
+    // with a 2x margin
+    val bound = 2L * (6L * SocketRelay.SockBuf / (24 + "v0-0".length) +
+      parts * SocketRelay.Chunk)
+    val server = new SocketRelay.Server(root, topic).start()
+    val client = new SocketRelay.Client("127.0.0.1", server.localPort, Map.empty)
+    try {
+      var consumed = 0L
+      var peak = 0L
+      (1 to 5).foreach { _ =>
+        Thread.sleep(200L) // the relay runs ahead until its buffers fill
+        val sent = server.sentTotal
+        val backlog = parts.toLong * perPart - sent
+        assert(sent - consumed < bound,
+          s"in-flight ${sent - consumed} frames (bound $bound): the relay buffered the backlog")
+        assert(backlog > 2 * bound, s"disk backlog $backlog never exceeded twice the bound")
+        peak = math.max(peak, sent - consumed)
+        var n = 0
+        while (n < 1000) { if (!client.next().get.isHeartbeat) n += 1 }
+        consumed += n
+      }
+      assert(peak > 0, "the relay never ran ahead of the client")
+      info(s"peak in-flight $peak frames (bound $bound)")
+    } finally {
+      client.close()
+      server.stop()
+      FileReplayLog.delete(root, topic)
+    }
   }
 
   test("slot overflow: a stalled consumer whose producer outran " +
